@@ -415,14 +415,12 @@ def q_nearest_updown(spark, sf_dir):
     the output is tie-free (min distance is unique even when several b rows
     attain it).
 
-    r15 (optimization round): the projection keeps NO right-side columns,
-    so this runs nearest_distance's per-leg as-of sweeps instead of the
-    full k-nearest rank machinery — provably the same rows and Distance
-    (min distance over the same three candidate branches; see the
-    nearest_distance docstring and tests/test_nearest_updown_distance_parity)
-    while skipping the right-side stable-id persist, both bucketed rank
-    relations, the rank-explode equi-joins and the right-columns assembly
-    join. Oracle unchanged; value-gated green at sf0.01 and sf0.1."""
+    The projection keeps NO right-side columns, so this runs
+    nearest_distance — provably the same rows and Distance as
+    nearest_ranges(k=1) (tests/test_nearest_updown_distance_parity) — whose
+    plan is one fused bucketed sweep over a single points relation: no
+    stable-id persist, no overlap semi-join, no rank relations and no join
+    back to the left rows."""
     from pyranges_1_x_spark.core import GenomicRanges
     from pyranges_1_x_spark.operators.nearest import nearest_distance
 

@@ -1,23 +1,42 @@
-"""Nearest-interval join via union-tag-sort sweeps (no O(n*m) blowup).
+"""Nearest-interval queries via bucketed sweeps (no O(n*m) blowup).
 
 Reference: ``nearest_ranges`` (range_frame.py:451-537, wrapper
 pyranges_main.py:2143-2391). Distance convention (doctest-verified):
 overlapping pairs have Distance 0; non-overlapping (incl. touching) have
 ``gap + 1`` (touching => 1). Rows with no eligible neighbor are dropped.
 
-Physical strategy: for k=1 in each direction we avoid any join at all —
-union the two frames' boundary points into one stream per group and run the
-bucketed two-phase as-of sweep (plans/sweep.py:asof_extreme): running min/max
-is computed per (keys, position-bucket) and patched across buckets via a
-one-row-per-bucket summary relation, so parallelism scales with #buckets
-rather than #chromosomes (a plain per-chromosome window caps at ~25-way).
-The matched other row's attributes are recovered with one equi-join on
-(keys, boundary). Overlap candidates (distance 0) come from the shared
-binned interval join. The k>1 rank windows use the same bucketing
-(plans/sweep.py:bucketed_row_number).
+``nearest_distance`` (self rows + Distance, no other columns) is ONE
+two-phase bucketed sweep. Each self row becomes a point at its End carrying
+the whole row as a struct; each other row a point at its Start carrying its
+End. Per (keys, position bucket) two windows give, at every self point:
 
-Because candidates come from SEVERAL plan branches that must be re-joined per
-input row, row identity uses the deterministic content-hash id
+* ``M`` — max other End among other Starts < End (ascending, self first at
+  ties, frame up to the row before);
+* ``F`` — min other Start among other Starts >= End, and ``G`` — min other
+  End over the same rows (descending, other first at ties, frame up to the
+  current row).
+
+Each is patched with the earlier/later buckets' extreme from a
+one-row-per-bucket summary, broadcast back (the two-phase posture of
+plans/sweep.py:asof_extreme: parallelism = #buckets, not #chromosomes).
+Per row: overlap <=> ``M > Start`` (binned_exists' predicate); forward =
+``F - End + 1``; backward = ``Start - M + 1`` when nothing overlaps — then
+the other rows starting before End are exactly those ending at or before
+Start, bar one empty at the point where the self row is empty (``G ==
+Start``, backward distance 1). One shuffle of the points; no row ids, no
+persist, no join back. Invalid rows (see ``invalid_ranges``) can differ from
+``nearest_ranges``: a self row with Start > End can miss a backward candidate
+that starts at or after its End, and an other row with a NULL Start is
+nobody's neighbor here.
+
+``nearest_ranges`` (k nearest, with the other rows' columns) must recover
+WHICH other rows are nearest, which those per-row extremes do not carry. For
+each direction it unions the two frames' boundary points into one stream per
+group and runs the bucketed as-of sweep (plans/sweep.py:asof_extreme) over
+the other frame's bucketed ranks (plans/sweep.py:bucketed_row_number);
+overlap candidates (distance 0) come from the shared binned interval join.
+Because candidates come from SEVERAL plan branches that must be re-joined
+per input row, row identity uses the deterministic content-hash id
 (plans/ids.py), never ``monotonically_increasing_id``.
 
 k > 1 uses the rank trick: rank the other frame's rows by boundary position
@@ -30,13 +49,13 @@ Directions 'forward'/'backward' are in self-coordinate terms; the
 strand-aware upstream/downstream resolution of the PyRanges wrapper
 (pyranges_main.py:2327-2391) is layered on top.
 
-Cost profile (r13, VERDICT r12 #6 — why the four-branch plan stands):
-warm per-branch walls at sf0.1 (60k left / 150k right, local[32]): left/right
-stable-id persists 0.15/0.09s, overlap semi 0.38s, forward/backward bucketed
-ranks 1.22/0.96s, each as-of sweep ~1.5s net, remainder in the best window +
-two assembly joins. Three rewrites were A/B'd interleaved in one warm
-session, every one value-identical on the gated upstream query AND plain
-any/k=3:
+Cost profile of ``nearest_ranges`` (r13, VERDICT r12 #6 — why its
+four-branch plan stands): warm per-branch walls at sf0.1 (60k left / 150k
+right, local[32]): left/right stable-id persists 0.15/0.09s, overlap semi
+0.38s, forward/backward bucketed ranks 1.22/0.96s, each as-of sweep ~1.5s
+net, remainder in the best window + two assembly joins. Three rewrites were
+A/B'd interleaved in one warm session, every one value-identical on the
+gated upstream query AND plain any/k=3:
   (1) min(struct(dist, rs, re, id)) aggregate replacing the k=1 best window
       (map-side combinable, no sort) — 1.02x, inside noise;
   (2) persisting the rank relations (each feeds the sweep AND the
@@ -48,93 +67,26 @@ any/k=3:
       union shuffles as one big relation where the two legs previously ran
       as smaller parallel stages.
 Conclusion: at gate scale the wall is stage-scheduling overhead over many
-small two-phase stages, not data volume — the branch count is semantically
-load-bearing (two directional sweeps + overlap + join-back are four
-different relations) and none of the fusions pays. At cluster scale the
-per-stage overhead amortizes as buckets fill; the plan shape is already the
-one that scales.
+small two-phase stages, not data volume. With the other rows' identities
+required, the branch count is semantically load-bearing (two directional
+rank sweeps + overlap + join-back are four different relations) and none of
+the fusions pays. ``nearest_distance`` needs no other-row identity, which is
+what lets its three terms share one sweep.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from pyranges_1_x_spark import names as nm
 from pyranges_1_x_spark.core import GenomicRanges
 from pyranges_1_x_spark.plans.ids import STABLE_ID_COLS, with_stable_id
-from pyranges_1_x_spark.plans.interval_join import binned_exists, binned_join, rename_keys
+from pyranges_1_x_spark.plans.interval_join import binned_join, floordiv, rename_keys
 from pyranges_1_x_spark.plans.qcache import persist_tracked
 from pyranges_1_x_spark.plans.sweep import asof_extreme, bucketed_row_number
 
 _SID = STABLE_ID_COLS
-
-
-def _forward_candidates(
-    left: DataFrame, right: DataFrame, keys: list[str], bucket_width: int
-) -> DataFrame:
-    """Per left row: smallest right Start >= left End (bucketed as-of sweep —
-    parallelism = #position buckets, not #chromosomes).
-
-    Returns stable-id cols + the left End (``__e__``) + __cand__ (that right
-    Start; null if none). The End rides through the sweep as payload so the
-    caller needs no join back to the left coordinates.
-    Right points count at position ties (Start == End is touching => eligible).
-    """
-    l_pts = left.select(
-        *keys, *_SID, F.col(nm.END_COL).alias("__pos__"), F.col(nm.END_COL).alias("__e__")
-    ).withColumn("__isd__", F.lit(False))
-    r_pts = right.select(*keys, F.col(nm.START_COL).alias("__pos__")).withColumn(
-        "__isd__", F.lit(True)
-    ).withColumn("__e__", F.lit(None).cast("long"))
-    for c in _SID:
-        r_pts = r_pts.withColumn(c, F.lit(None).cast("long"))
-    allp = l_pts.unionByName(r_pts.select(*l_pts.columns))
-    swept = asof_extreme(
-        allp, keys, "__pos__", F.col("__isd__"), "__pos__",
-        side="ge", agg="min", bucket_width=bucket_width, out_col="__cand__",
-    )
-    return swept.filter(~F.col("__isd__")).select(*_SID, "__e__", "__cand__")
-
-
-def _backward_candidates(
-    left: DataFrame, right: DataFrame, keys: list[str], bucket_width: int
-) -> DataFrame:
-    """Per left row: largest right End <= left Start (bucketed as-of sweep).
-    The left Start rides through as ``__s__`` payload (no join back needed)."""
-    l_pts = left.select(
-        *keys, *_SID, F.col(nm.START_COL).alias("__pos__"), F.col(nm.START_COL).alias("__s__")
-    ).withColumn("__isd__", F.lit(False))
-    r_pts = right.select(*keys, F.col(nm.END_COL).alias("__pos__")).withColumn(
-        "__isd__", F.lit(True)
-    ).withColumn("__s__", F.lit(None).cast("long"))
-    for c in _SID:
-        r_pts = r_pts.withColumn(c, F.lit(None).cast("long"))
-    allp = l_pts.unionByName(r_pts.select(*l_pts.columns))
-    swept = asof_extreme(
-        allp, keys, "__pos__", F.col("__isd__"), "__pos__",
-        side="le", agg="max", bucket_width=bucket_width, out_col="__cand__",
-    )
-    return swept.filter(~F.col("__isd__")).select(*_SID, "__s__", "__cand__")
-
-
-def _overlap_ids(left: DataFrame, right: DataFrame, keys, bin_size: int) -> DataFrame:
-    """Distinct stable ids of left rows overlapping any right interval —
-    LEFT SEMI via binned_exists, so the pair relation never materializes."""
-    rb, rkeys = rename_keys(
-        right.select(*keys, F.col(nm.START_COL).alias("__rs__"), F.col(nm.END_COL).alias("__re__")),
-        keys,
-    )
-    return binned_exists(
-        left.select(*_SID, *keys, nm.START_COL, nm.END_COL),
-        rb,
-        keys=keys,
-        right_keys=rkeys,
-        anti=False,
-        bin_size=bin_size,
-        rstart="__rs__",
-        rend="__re__",
-    ).select(*_SID)
 
 
 def nearest_distance(
@@ -148,21 +100,23 @@ def nearest_distance(
     dist_col: str = "Distance",
     bin_size: int | None = None,
 ) -> GenomicRanges:
-    """Self rows + the distance to the nearest other interval (no other columns
-    appended — the tie-ambiguity-free core of nearest_ranges). Rows with no
-    eligible neighbor are dropped (reference behavior).
+    """Self rows + the distance to the nearest other interval: EXACTLY the
+    (self columns, Distance) projection of ``nearest_ranges(k=1)``, incl. the
+    5'-aware upstream/downstream per-row leg mapping (pinned by
+    tests/test_nearest_updown_distance_parity). Rows with no eligible
+    neighbor are dropped (reference behavior). Plan: one fused bucketed
+    sweep (module docstring).
 
-    Supports the same 5'-aware ``upstream``/``downstream`` directions as
-    ``nearest_ranges`` via the identical per-row leg mapping (r15): the
-    forward sweep sees only the left rows whose strand selects it, the
-    backward sweep the rest, and the overlap branch sees every row. Because
-    the k=1 best candidate is ``min(distance)`` with the right row's identity
-    discarded, this path computes EXACTLY the Distance column of
-    ``nearest_ranges(k=1)`` — the per-leg as-of sweep already carries each
-    left row's nearest boundary, so the right-side rank relations, the
-    rank-explode equi-joins and the right-columns assembly join of the full
-    path are dead weight when the caller only keeps self columns + Distance
-    (pinned by tests/test_nearest_updown_distance_parity)."""
+    ``exclude_overlaps=True`` returns that projection of
+    ``nearest_ranges(k=1, exclude_overlaps=True)`` itself: with an overlap
+    present, the sweep's ``M`` is not the largest other End <= Start."""
+    if exclude_overlaps:
+        full = nearest_ranges(
+            self, other, strand_behavior=strand_behavior, match_by=match_by,
+            direction=direction, exclude_overlaps=True, k=1, dist_col=dist_col,
+            bin_size=bin_size,
+        )
+        return GenomicRanges(full.df.select(*self.df.columns, dist_col))
     odf, keys = self._binary_prepared(other, strand_behavior, match_by)
     bin_size = self.resolve_bin(bin_size)
     leg_pred = None  # per-row leg selection for upstream/downstream
@@ -170,7 +124,7 @@ def nearest_distance(
         # Same resolution as nearest_ranges: unstranded input degrades to the
         # single genomic direction; stranded input routes each row to the leg
         # its 5' direction selects (upstream of '+' = backward; of '-' =
-        # forward) while both legs are built once over the full input.
+        # forward). A NULL Strand selects neither leg: overlap only.
         up = direction == nm.NEAREST_UPSTREAM
         if not self.has_strand:
             direction = nm.NEAREST_BACKWARD if up else nm.NEAREST_FORWARD
@@ -179,42 +133,84 @@ def nearest_distance(
                 F.col(nm.STRAND_COL) == "-" if up else F.col(nm.STRAND_COL) != "-"
             )
             direction = nm.NEAREST_ANY
-    # The stable-id relation feeds up to FOUR plan branches (forward sweep,
-    # backward sweep, overlap join, final join-back); persist it so the id
-    # shuffle + input scan run once instead of per branch (A/B at sf0.1:
-    # 3.34s -> 2.68s). Tracked (plans/qcache.py, r16): CacheManager holds
-    # persisted plans strongly, so the caller releases via free_tracked().
-    left = persist_tracked(with_stable_id(self.df))
-    right = odf.select(*keys, nm.START_COL, nm.END_COL)
 
-    cands = []
+    # Class 0: self row at its End; class 1: other row at its Start. A point
+    # without a position belongs to no bucket (and would sort into every
+    # bucket's patch below), so it is dropped up front.
+    pts = (
+        self.df.select(
+            *keys, F.col(nm.END_COL).alias("__pos__"), F.lit(0).alias("__cls__"),
+            F.struct(*self.df.columns).alias("__row__"),
+        )
+        .unionByName(
+            odf.select(
+                *keys, F.col(nm.START_COL).alias("__pos__"), F.lit(1).alias("__cls__"),
+                F.col(nm.END_COL).alias("__re__"),
+            ),
+            allowMissingColumns=True,
+        )
+        .filter(F.col("__pos__").isNotNull())
+        .withColumn("__bkt__", floordiv(F.col("__pos__"), bin_size))
+    )
+    is_other = F.col("__cls__") == 1
+    o_start = F.when(is_other, F.col("__pos__"))
+    o_end = F.when(is_other, F.col("__re__"))
+
+    in_bucket = Window.partitionBy(*keys, "__bkt__")
+    before = in_bucket.orderBy(F.col("__pos__").asc(), F.col("__cls__").asc()).rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    at_or_after = in_bucket.orderBy(
+        F.col("__pos__").desc(), F.col("__cls__").desc()
+    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    local = pts.select(
+        *keys, "__bkt__", "__cls__", "__row__",
+        F.max(o_end).over(before).alias("__lm__"),
+        F.min(o_start).over(at_or_after).alias("__lf__"),
+        F.min(o_end).over(at_or_after).alias("__lg__"),
+    ).filter(F.col("__cls__") == 0)
+
+    # Buckets partition the position axis, so every other point in an
+    # earlier bucket starts before this End and every one in a later bucket
+    # after it.
+    buckets = Window.partitionBy(*keys)
+    earlier = buckets.orderBy(F.col("__bkt__").asc()).rowsBetween(Window.unboundedPreceding, -1)
+    later = buckets.orderBy(F.col("__bkt__").desc()).rowsBetween(Window.unboundedPreceding, -1)
+    summary = (
+        pts.groupBy(*keys, "__bkt__")
+        .agg(
+            F.max(o_end).alias("__tm__"), F.min(o_start).alias("__tf__"),
+            F.min(o_end).alias("__tg__"),
+        )
+        .select(
+            *keys, "__bkt__",
+            F.max("__tm__").over(earlier).alias("__pm__"),
+            F.min("__tf__").over(later).alias("__pf__"),
+            F.min("__tg__").over(later).alias("__pg__"),
+        )
+    )
+
+    swept = local.join(F.broadcast(summary), on=[*keys, "__bkt__"]).select(
+        "__row__.*",
+        F.greatest("__lm__", "__pm__").alias("__m__"),
+        F.least("__lf__", "__pf__").alias("__f__"),
+        F.least("__lg__", "__pg__").alias("__g__"),
+    )
+    start, end = F.col(nm.START_COL), F.col(nm.END_COL)
+    m, f, g = F.col("__m__"), F.col("__f__"), F.col("__g__")
+    terms = [F.when(m > start, F.lit(0).cast("long"))]
     if direction in (nm.NEAREST_ANY, nm.NEAREST_FORWARD):
-        l_fwd = left.filter(leg_pred) if leg_pred is not None else left
-        fwd = (
-            _forward_candidates(l_fwd, right, keys, bin_size)
-            .filter(F.col("__cand__").isNotNull())
-            .select(*_SID, (F.col("__cand__") - F.col("__e__") + 1).alias("__dist__"))
-        )
-        cands.append(fwd)
+        fwd = f - end + 1
+        terms.append(fwd if leg_pred is None else F.when(leg_pred, fwd))
     if direction in (nm.NEAREST_ANY, nm.NEAREST_BACKWARD):
-        l_bwd = left.filter(~leg_pred) if leg_pred is not None else left
-        bwd = (
-            _backward_candidates(l_bwd, right, keys, bin_size)
-            .filter(F.col("__cand__").isNotNull())
-            .select(*_SID, (F.col("__s__") - F.col("__cand__") + 1).alias("__dist__"))
-        )
-        cands.append(bwd)
-    if not exclude_overlaps:
-        ov = _overlap_ids(left, right, keys, bin_size).withColumn(
-            "__dist__", F.lit(0).cast("long")
-        )
-        cands.append(ov)
-
-    allc = cands[0]
-    for extra in cands[1:]:
-        allc = allc.unionByName(extra)
-    best = allc.groupBy(*_SID).agg(F.min("__dist__").alias(dist_col))
-    out = left.join(best, on=_SID, how="inner").drop(*_SID)
+        bwd = F.when(g == start, 1).when(m <= start, start - m + 1)
+        terms.append(bwd if leg_pred is None else F.when(~leg_pred, bwd))
+    dist = terms[0] if len(terms) == 1 else F.least(*terms)
+    out = (
+        swept.withColumn(dist_col, dist)
+        .filter(F.col(dist_col).isNotNull())
+        .drop("__m__", "__f__", "__g__")
+    )
     return GenomicRanges(out)
 
 
@@ -270,8 +266,10 @@ def nearest_ranges(
             direction = nm.NEAREST_ANY
     odf, keys = self._binary_prepared(other, strand_behavior, match_by)
     bin_size = self.resolve_bin(bin_size)
-    # Same multi-branch persist rationale (and tracked lifecycle) as
-    # nearest_distance above.
+    # Each stable-id relation feeds several plan branches; persist it so the
+    # id shuffle + input scan run once. Tracked (plans/qcache.py):
+    # CacheManager holds persisted plans strongly, so the caller releases
+    # via free_tracked().
     left = persist_tracked(with_stable_id(self.df))
     rsid = ["__rid1__", "__rid2__", "__rdr__"]
     right = persist_tracked(with_stable_id(odf))

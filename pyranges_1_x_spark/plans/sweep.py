@@ -38,8 +38,11 @@ caller must release via ``free_tracked()`` once the result is consumed
 that already persist their deltas).
 
 ``asof_extreme``/``bucketed_row_number`` keep the recompute shape: their
-points relations are unions of already-persisted inputs (nearest) or are
-materialized by the caller (fdr), where the duplicate evaluation is cheap.
+points relations are unions of already-persisted inputs (nearest_ranges) or
+are materialized by the caller (fdr), where the duplicate evaluation is
+cheap. ``nearest_distance`` runs its own sweep of the same two-phase shape
+(operators/nearest.py): it needs three running extremes under two tie rules
+in one pass, which no single ``asof_extreme`` call gives.
 """
 
 from __future__ import annotations

@@ -49,8 +49,8 @@ def test_free_tracked_returns_to_baseline_per_consumer(spark):
     consumers = {
         # prefix_sweep persist (plans/sweep.py)
         "coverage": lambda: a.to_coverage(use_strand=False).df,
-        # nearest_distance / nearest_ranges stable-id persists (nearest.py)
-        "nearest_distance": lambda: a.nearest_distance(b).df,
+        # nearest_ranges stable-id persists (nearest.py)
+        "nearest_ranges": lambda: a.nearest_ranges(b).df,
         # fdr lazy localCheckpoint (functions/stats.py)
         "fdr": lambda: pr.stats.fdr(
             spark.range(500).select((F.col("id") / 500.0).alias("PValue"))
@@ -65,6 +65,12 @@ def test_free_tracked_returns_to_baseline_per_consumer(spark):
             f"{name}: persistent RDDs leaked past free_query_caches"
         )
         assert qcache.tracked_count() == 0
+
+    # nearest_distance is one sweep over a single points relation: it
+    # persists nothing, so there is nothing to free.
+    _noop(a.nearest_distance(b).df)
+    assert qcache.tracked_count() == 0
+    assert _n_persistent_rdds(spark) == baseline
 
 
 def test_free_tracked_is_idempotent_and_safe_before_materialization(spark):

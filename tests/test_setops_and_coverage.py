@@ -128,6 +128,51 @@ def test_nearest_distance_bruteforce(spark):
     # nearest_ranges agrees on the distances
     nr = a.nearest_ranges(b).df.toPandas()
     assert dict(zip(nr.idx, nr.Distance)) == expected
+    # An other row with a NULL Start is nobody's neighbor: its End must not
+    # leak into the sweep's cross-bucket patch as an overlap.
+    nb = GenomicRanges(
+        spark.createDataFrame([("chr1", None, 100)], "Chromosome string, Start long, End long")
+    )
+    assert a.nearest_distance(nb).df.count() == 0
+
+
+def brute_nearest_nonoverlapping(a, b, direction):
+    """Per a row: distance to the nearest b interval that does not overlap
+    it, in the row's leg (upstream of '+' = backward, of '-' = forward)."""
+    out = {}
+    for ia, ra in a.iterrows():
+        d = direction
+        if d in ("upstream", "downstream"):
+            fwd_leg = (ra.Strand == "-") if d == "upstream" else (ra.Strand != "-")
+            d = "forward" if fwd_leg else "backward"
+        best = None
+        for _, rb in b[b.Chromosome == ra.Chromosome].iterrows():
+            cands = []
+            if d in ("any", "forward") and rb.Start >= ra.End:
+                cands.append(rb.Start - ra.End + 1)
+            if d in ("any", "backward") and rb.End <= ra.Start:
+                cands.append(ra.Start - rb.End + 1)
+            for c in cands:
+                best = c if best is None else min(best, c)
+        if best is not None:
+            out[ia] = best
+    return out
+
+
+def test_nearest_distance_exclude_overlaps_bruteforce(spark):
+    pa = random_frame(31, 30).assign(
+        idx=range(30), Strand=["+" if i % 3 else "-" for i in range(30)]
+    )
+    pb = random_frame(32, 20)
+    a, b = GenomicRanges(spark.createDataFrame(pa)), GenomicRanges(spark.createDataFrame(pb))
+    for direction in ("any", "forward", "backward", "upstream", "downstream"):
+        got = a.nearest_distance(
+            b, direction=direction, exclude_overlaps=True, strand_behavior="ignore"
+        ).df.toPandas()
+        assert list(got.columns) == [*pa.columns, "Distance"]
+        assert dict(zip(got.idx, got.Distance)) == brute_nearest_nonoverlapping(
+            pa, pb, direction
+        ), direction
 
 
 def test_max_disjoint(spark):
