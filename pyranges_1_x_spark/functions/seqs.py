@@ -497,7 +497,7 @@ def _get_sequence_tiled(
     # single fragment IS the assembled sequence, so they skip the aggregate
     # exchange and the ObjectHashAggregate buffer. Only multi-tile
     # fragments shuffle into the collect. Interleaved A/B on the isolated
-    # assembly stage (scripts/ab_seqasm_r16.py): B faster 5/5 rounds, min
+    # assembly stage (OPTIMIZATION_r16.md §7): B faster 5/5 rounds, min
     # 0.434 -> 0.307s; outputs asserted identical on 600,000 rows.
     single = frags.filter(F.col("__nt__") == 0).select(
         *STABLE_ID_COLS, F.col("__frag__").alias("__asm__")

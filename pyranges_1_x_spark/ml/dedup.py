@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pyranges_1_x_spark.ml.text import bow_signature, fingerprint
-from pyranges_1_x_spark.plans.qcache import checkpoint_tracked, free_checkpoint
+from pyranges_1_x_spark.plans.qcache import checkpoint_tracked, free_checkpoint, persist_tracked
 
 #: Diagnostics from the LAST connected_components call in this process:
 #: {"path": "driver"|"distributed", "edges": 2|E| (bidirectional rows),
@@ -992,9 +992,7 @@ def repeated_substring_spans(
         F.col("__pos__").cast("long").alias("Start"),
         (F.col("__pos__") + min_len).cast("long").alias("End"),
     )
-    return island_agg(
-        spans, [id_col], slack=0, count_col="n_grams", bucket_width=1 << 14, adaptive=True
-    )
+    return island_agg(spans, [id_col], slack=0, count_col="n_grams", bucket_width=1 << 14)
 
 
 def strip_repeated_substrings(
@@ -1007,7 +1005,6 @@ def strip_repeated_substrings(
     hash_fn=xxhash64_fn,
     out_col: str = "clean_text",
     hot_gram_threshold: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Remove every repeated span found by ``repeated_substring_spans`` from
     every document (the simplification most substring-dedup reproductions
@@ -1018,15 +1015,13 @@ def strip_repeated_substrings(
     place — plus ``n_chars_removed``. Docs with no repeated span pass
     through byte-identical.
 
-    ``materialize`` (r16, VERDICT r15 #3): the input feeds TWO plan
-    branches — the span-finding gram pipeline and the rebuild join — so an
-    upstream-derived input (e.g. the curation chain's boilerplate stage)
-    would be evaluated twice end to end. ``persist_tracked`` runs it once;
-    the caller releases via ``free_tracked()``. Interleaved A/B at sf0.1
-    inside the curation chain (scripts/ab_curation_r16.py): B faster 3/4
-    rounds, min 8.14 -> 7.63s; at scale it removes two corpus-line
-    shuffles per call. Pass ``materialize=False`` when the input is
-    already a materialized table/persisted relation.
+    The input feeds TWO plan branches — the span-finding gram pipeline and
+    the rebuild join — so an upstream-derived input (e.g. the curation
+    chain's boilerplate stage) would be evaluated twice end to end; a
+    tracked persist runs it once (the caller releases via
+    ``free_tracked()``). Interleaved A/B at sf0.1 inside the curation chain
+    (OPTIMIZATION_r16.md §2): persist faster 3/4 rounds, min 8.14 ->
+    7.63s; at scale it removes two corpus-line shuffles per call.
 
     The rebuild is a row-local ``aggregate`` over the doc's sorted spans
     carrying (chars-consumed-so-far, rebuilt-prefix) — substring slices off
@@ -1034,10 +1029,7 @@ def strip_repeated_substrings(
     lambda appends the tail. Spans per doc are bounded by len/min_len, and
     each slice scans from its offset (the O(pos) substring cost is paid
     once per GAP, not per char)."""
-    if materialize:
-        from pyranges_1_x_spark.plans.qcache import persist_tracked
-
-        df = persist_tracked(df)
+    df = persist_tracked(df)
     spans = repeated_substring_spans(
         df, text_col, id_col, min_len=min_len, min_count=min_count,
         hash_fn=hash_fn, hot_gram_threshold=hot_gram_threshold,

@@ -504,12 +504,12 @@ def ivf_assign(
                 for c in centroids
             ]
         )
-        # argmin: first index on ties; bind=True evaluates the k
+        # argmin: first index on ties; _pq_argmin evaluates the k
         # CodegenFallback folds ONCE per row (this is the per-vector
         # 100 TB assignment scan — the bare duplicated argmin shape would
         # double it; review find)
         return df.withColumn(
-            "__cell__", _pq_argmin(dists, bind=True).cast("long")
+            "__cell__", _pq_argmin(dists).cast("long")
         )
     dots = F.array(
         *[dot(F.col(vec_col), F.array(*[F.lit(float(x)) for x in c])) for c in centroids]
@@ -613,130 +613,66 @@ def pq_codebooks(
     ]
 
 
-#: PQ scoring shape, r14 three-arm interleaved A/B (scripts/ab_pq_r14.py),
-#: all arms asserted BIT-IDENTICAL on both gates before timing. Minima at
-#: sf0.1 (sf0.01 reads the same — the cost is per-row expression work):
-#:   "arrow"    — one vectorized pandas UDF does encode+ADC with the fold's
-#:                exact sequential summation order (numpy float64 elementwise
-#:                ops are IEEE-correct, ``acc += diff*diff`` over dims in
-#:                order IS the 0.0-seeded fold). pq_topk 0.43s,
-#:                ivfpq_topk 1.03s. DEFAULT.
-#:   "fold"     — HOF aggregate/zip_with folds: 128 CodegenFallback lambdas
-#:                per row, interpreted. 5.0s / 5.6s — the r13 volatility
-#:                source (VERDICT r13 #3: 5.2-22.5s across same-code runs).
-#:   "unrolled" — left-assoc element_at chains: the ~32k-node expression
-#:                tree FAILS Janino compilation ("Failed to compile the
-#:                generated Java code") and the whole stage runs interpreted:
-#:                17.0s / 9.2s — the r6 ``dot()`` lesson holds even at
-#:                8-element chains. Kept only as the measured conclusion.
-_PQ_IMPL = "arrow"
-
-
-def _pq_sq_l2_chain(
-    vec: Column, offset: int, centroid: list[float]
-) -> Column:
-    """Unrolled squared-L2 between ``vec[offset:offset+len(centroid)]`` and a
-    literal centroid: a left-associated ``((0.0 + d*d) + d*d) + ...`` chain —
-    the exact IEEE operation sequence of the 0.0-seeded sequential fold, but
-    pure arithmetic Catalyst can compile (no higher-order lambda, so no
-    CodegenFallback). ``try_element_at`` keeps the out-of-range semantics of
-    the fold shape under ANSI mode: a short/malformed vector yields NULL, not
-    an error."""
-    acc = F.lit(0.0)
-    for j, c in enumerate(centroid):
-        d = F.try_element_at(vec, F.lit(offset + j + 1)) - F.lit(float(c))
-        acc = acc + d * d
-    return acc
-
-
-def _pq_dist_arrays(
-    vec: Column, codebooks: list[list[list[float]]], impl: str
-) -> list[Column]:
-    """Per-subspace arrays of k squared-L2 distances (bit-identical between
-    the two impls — see ``_PQ_IMPL``)."""
+def _pq_dist_arrays(vec: Column, codebooks: list[list[list[float]]]) -> list[Column]:
+    """Per-subspace arrays of k squared-L2 distances, each the 0.0-seeded
+    sequential HOF fold over the subspace's dims."""
     dsub = len(codebooks[0][0])
     arrays = []
     for s, cb in enumerate(codebooks):
-        if impl == "fold":
-            sub = F.slice(vec, s * dsub + 1, dsub)
-            dists = [
-                F.aggregate(
-                    F.zip_with(
-                        sub,
-                        F.array(*[F.lit(float(x)) for x in centroid]),
-                        lambda x, y: (x - y) * (x - y),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-                for centroid in cb
-            ]
-        else:
-            dists = [_pq_sq_l2_chain(vec, s * dsub, c) for c in cb]
+        sub = F.slice(vec, s * dsub + 1, dsub)
+        dists = [
+            F.aggregate(
+                F.zip_with(
+                    sub,
+                    F.array(*[F.lit(float(x)) for x in centroid]),
+                    lambda x, y: (x - y) * (x - y),
+                ),
+                F.lit(0.0),
+                lambda acc, v: acc + v,
+            )
+            for centroid in cb
+        ]
         arrays.append(F.array(*dists))
     return arrays
 
 
-def _pq_argmin(dist_array: Column, *, bind: bool) -> Column:
+def _pq_argmin(dist_array: Column) -> Column:
     """FIRST index (0-based, int) of the minimum in a distance-array column.
-    ``array_position(arr, array_min(arr))`` references the array twice.
-    bind=True wraps it in the one-element-transform idiom so the array is
-    evaluated once — right when the array is a HOF-fold subtree (already
-    CodegenFallback, so the transform costs nothing extra and halves the
-    fold evaluations). bind=False emits the bare duplicated shape — right
-    when the array is codegen-able arithmetic: wrapping it in a transform
-    would drag the whole subtree into interpreted eval, while the duplicate
-    stays compiled and whole-stage codegen's subexpression elimination merges
-    the two references anyway. An all-NULL array (malformed vector) yields
-    NULL either way: array_min skips nulls -> NULL, array_position(arr,
-    NULL) -> NULL."""
-    if bind:
-        pos = F.element_at(
-            F.transform(
-                F.array(dist_array),
-                lambda dl: F.array_position(dl, F.array_min(dl)),
-            ),
-            1,
-        )
-    else:
-        pos = F.array_position(dist_array, F.array_min(dist_array))
+    ``array_position(arr, array_min(arr))`` references the array twice, so
+    it is wrapped in the one-element-transform idiom and the array is
+    evaluated once — the array is a HOF-fold subtree (already
+    CodegenFallback), so the transform costs nothing extra and halves the
+    fold evaluations. An all-NULL array (malformed vector) yields NULL:
+    array_min skips nulls -> NULL, array_position(arr, NULL) -> NULL."""
+    pos = F.element_at(
+        F.transform(
+            F.array(dist_array),
+            lambda dl: F.array_position(dl, F.array_min(dl)),
+        ),
+        1,
+    )
     return (pos - 1).cast("int")
 
 
-def pq_encode(
-    vec: Column, codebooks: list[list[list[float]]], *, impl: str | None = None
-) -> Column:
+def pq_encode(vec: Column, codebooks: list[list[list[float]]]) -> Column:
     """PQ codes for a vector column: per subspace, the index of the nearest
     codebook centroid (squared L2; FIRST index on ties). Returns
     ``array<int>`` of ``m`` codes — the 100 TB ANN compression step: a
     64-dim float vector becomes m log2(k)-bit codes (8 bytes here), so the
     scan side of search reads ~30x less than raw embeddings.
 
-    Numeric discipline: each distance is the left-assoc 0.0-seeded sequence
-    ``((0.0+d*d)+d*d)+...`` — identical IEEE rounding whether emitted as the
-    HOF fold (impl="fold", the effective default for this expression-level
-    API) or the unrolled chain (impl="unrolled" — kept ONLY as the measured
-    Janino-fallback conclusion; do not use it on production-sized
-    codebooks). DuckDB's ``list_sum(list_transform(...))`` reproduces
-    it bit-identically (proven through the kmeans gate), so argmin agrees
-    across engines unconditionally — no margin assumptions needed. The
-    per-subspace distance ARRAY is bound once as a lambda variable (the
-    one-element-transform idiom) so argmin's two consumers don't re-evaluate
-    the k distances twice.
+    Numeric discipline: each distance is the left-assoc 0.0-seeded HOF fold
+    ``((0.0+d*d)+d*d)+...``. DuckDB's ``list_sum(list_transform(...))``
+    reproduces it bit-identically (proven through the kmeans gate), so
+    argmin agrees across engines unconditionally — no margin assumptions
+    needed. The per-subspace distance ARRAY is bound once as a lambda
+    variable (the one-element-transform idiom) so argmin's two consumers
+    don't re-evaluate the k distances twice. An unrolled ``element_at``
+    chain of the same arithmetic fails Janino compilation on
+    production-sized codebooks and runs interpreted (SCALING.md, "PQ
+    scoring shape A/B (r14)").
     """
-    impl = impl or _PQ_IMPL
-    if impl == "arrow":
-        # "arrow" is a pq_topk SCORING shape (one UDF computes codes+adist
-        # fused); the expression-level encode API keeps the HOF fold — the
-        # unrolled shape would silently hand a large codebook to the
-        # Janino-fallback path (the measured 17s regression).
-        impl = "fold"
-    return F.array(
-        *[
-            _pq_argmin(arr, bind=(impl == "fold"))
-            for arr in _pq_dist_arrays(vec, codebooks, impl)
-        ]
-    )
+    return F.array(*[_pq_argmin(arr) for arr in _pq_dist_arrays(vec, codebooks)])
 
 
 def pq_adc_table(
@@ -768,9 +704,10 @@ def _pq_adist_arrow(
     codebooks: list[list[list[float]]],
 ) -> DataFrame:
     """Arrow-batched encode+ADC: one vectorized pandas UDF computes each
-    row's PQ codes and the m-lookup ADC sum. Bit-identical to the fold
-    impl by construction: numpy float64 elementwise ops are IEEE-correct
-    per element, the per-centroid distance accumulates ``acc += diff*diff``
+    row's PQ codes and the m-lookup ADC sum. Bit-identical to the
+    ``pq_encode`` fold codes summed through the ADC table, by construction:
+    numpy float64 elementwise ops are IEEE-correct per element, the
+    per-centroid distance accumulates ``acc += diff*diff``
     SEQUENTIALLY over the dsub dims (the 0.0-seeded fold order), argmin is
     numpy's first-index-on-ties, and adist accumulates sequentially over
     subspaces. Malformed vectors (null / short / containing null-or-NaN
@@ -779,8 +716,8 @@ def _pq_adist_arrow(
     under the fold and sorts LAST (Spark treats NaN as greatest), so
     dropping it leaves the same top-k whenever k finite rows exist. The one
     residual divergence (documented trade, r14 review): with FEWER than k
-    finite rows the fold impl NaN-pads the tail of the top-k while this
-    impl returns only the finite rows — a row whose distance is undefined
+    finite rows a fold-scored top-k would NaN-pad its tail while this
+    returns only the finite rows — a row whose distance is undefined
     has no defensible rank."""
     import numpy as np
     import pandas as pd
@@ -867,62 +804,16 @@ def pq_topk(
     IVF-PQ stack. The m lookups accumulate 0.0-seeded in subspace order so
     the double compares bit-exactly cross-engine.
 
-    Plan shape (r14, VERDICT r13 #3): the default arrow impl scores in ONE
-    vectorized pandas UDF (see ``_pq_adist_arrow`` / ``_PQ_IMPL``) — the
-    interleaved three-arm A/B reads 0.43s (arrow) vs 5.0s (the old HOF fold,
-    128 interpreted CodegenFallback lambdas per row — the board's most
-    volatile query, 5.2-22.5s across same-code r13 sessions) vs 17.0s (the
-    unrolled element_at chain, which fails Janino compilation) at sf0.1,
-    bit-identical results asserted across all three arms before timing
-    (scripts/ab_pq_r14.py, SCALING.md). The non-arrow impls keep the
-    original expression shapes for A/B and as executable documentation."""
+    Plan shape (r14, VERDICT r13 #3): scoring runs in ONE vectorized
+    pandas UDF (``_pq_adist_arrow``), bit-identical to the ``pq_encode``
+    fold codes summed through the ADC table. Interleaved three-arm A/B at
+    sf0.1, results asserted bit-identical before timing (SCALING.md, "PQ
+    scoring shape A/B (r14)"): 0.43s for this UDF vs 5.0s for the HOF fold
+    (128 interpreted CodegenFallback lambdas per row — the board's most
+    volatile query, 5.2-22.5s across same-code r13 sessions) vs 17.0s for
+    an unrolled element_at chain, which fails Janino compilation."""
     table = pq_adc_table(query_vec, codebooks)
-    impl = _PQ_IMPL
-    if impl == "arrow":
-        scored = _pq_adist_arrow(df, vec_col, id_col, table, codebooks)
-    elif impl == "fold":
-        codes = pq_encode(F.col(vec_col), codebooks, impl=impl)
-        adist = F.element_at(
-            F.transform(
-                F.array(codes),
-                lambda cd: F.aggregate(
-                    F.array(
-                        *[
-                            F.element_at(
-                                F.array(*[F.lit(float(x)) for x in table[s]]),
-                                F.element_at(cd, s + 1) + 1,
-                            )
-                            for s in range(len(codebooks))
-                        ]
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-            ),
-            1,
-        )
-        scored = df.select(F.col(id_col), adist.alias("adist"))
-    else:
-        m = len(codebooks)
-        dist_arrays = _pq_dist_arrays(F.col(vec_col), codebooks, impl)
-        step1 = df.select(
-            F.col(id_col),
-            *[arr.alias(f"_pq_d{s}") for s, arr in enumerate(dist_arrays)],
-        )
-        step2 = step1.select(
-            F.col(id_col),
-            *[
-                _pq_argmin(F.col(f"_pq_d{s}"), bind=False).alias(f"_pq_c{s}")
-                for s in range(m)
-            ],
-        )
-        acc = F.lit(0.0)
-        for s in range(m):
-            acc = acc + F.try_element_at(
-                F.array(*[F.lit(float(x)) for x in table[s]]),
-                F.col(f"_pq_c{s}") + 1,
-            )
-        scored = step2.select(F.col(id_col), acc.alias("adist"))
+    scored = _pq_adist_arrow(df, vec_col, id_col, table, codebooks)
     # A malformed/short embedding yields NULL codes -> NULL adist, and a
     # plain asc sort puts NULLS FIRST — garbage rows would displace true
     # neighbors from the top-k (review find, r12). Drop them: a row that

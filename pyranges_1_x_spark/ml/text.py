@@ -895,7 +895,8 @@ def remove_boilerplate_lines(
     partitioning.
 
     The join back DELIBERATELY stays keyed on the line text (VERDICT r14
-    #3 considered and measured — scripts/ab_text_joinback_r15.py): unlike
+    #3 considered and measured — SCALING.md, "Text-dedup join-back keying
+    (r15)"): unlike
     ``dedup_paragraphs`` (whose keep-set is first-occurrence coordinates
     and therefore re-keyable by doc id), boilerplate membership must meet
     every occurrence BY CONTENT, so an xxhash64-keyed variant still
@@ -966,7 +967,7 @@ def dedup_paragraphs(
     by (paragraph, doc, pos) once per exchange side and short-circuits at
     the first row per key; (doc, pos) is unique per occurrence, so the
     top-1 is fully deterministic (r16 interleaved A/B,
-    scripts/ab_para_dedup_r16.py: B faster 5/5 rounds, min 2.02 → 1.79s at
+    OPTIMIZATION_r16.md §1: B faster 5/5 rounds, min 2.02 → 1.79s at
     sf0.1; SortAggregate 2 → 0, WindowGroupLimit 0 → 2; values identical).
     The key cardinality story is unchanged — the grouping key must be the
     text because exact dedup needs a text comparison somewhere, and the

@@ -84,7 +84,6 @@ def max_disjoint_overlaps(
             island_col="__mdj_isl__",
             tiebreak=tie,
             bucket_width=self.resolve_bin(None) * 16,
-            adaptive=True,
         )
         group_cols = [*keys, "__mdj_isl__"]
     else:

@@ -32,7 +32,6 @@ def merge_overlaps(
         slack=slack,
         count_col=count_col,
         bucket_width=self.resolve_bin(None) * 16,
-        adaptive=True,
     )
     return GenomicRanges(out)
 
@@ -61,7 +60,6 @@ def cluster_overlaps(
         island_col=cluster_column,
         tiebreak=tiebreak,
         bucket_width=self.resolve_bin(None) * 16,
-        adaptive=True,
     )
     return GenomicRanges(out)
 

@@ -89,6 +89,31 @@ from pyranges_1_x_spark.plans.sweep import asof_extreme, bucketed_row_number
 _SID = STABLE_ID_COLS
 
 
+def _resolve_legs(self: GenomicRanges, direction: str):
+    """Resolve upstream/downstream into a genomic ``(direction, leg_pred)``.
+
+    5'/3'-aware (reference wrapper pyranges_main.py:2327-2391 splits self by
+    strand; we additionally flip the genomic direction on the '-' half,
+    which is the documented upstream/downstream intent — the reference's
+    literal code passes the same direction to both halves, which its own
+    doctests never exercise). Unstranded input degrades to the single
+    genomic direction. Stranded input keeps both legs (direction 'any') and
+    routes each row by ``leg_pred``, true for the rows the FORWARD leg
+    serves: '-' rows for upstream, '+'/other rows for downstream (upstream
+    of '+' = smaller coordinates = backward). A NULL Strand makes
+    ``leg_pred`` NULL, which selects neither leg: such a row keeps only its
+    overlap (distance-0) candidates. Other directions pass through with
+    ``leg_pred=None``.
+    """
+    if direction not in (nm.NEAREST_UPSTREAM, nm.NEAREST_DOWNSTREAM):
+        return direction, None
+    up = direction == nm.NEAREST_UPSTREAM
+    if not self.has_strand:
+        return (nm.NEAREST_BACKWARD if up else nm.NEAREST_FORWARD), None
+    strand = F.col(nm.STRAND_COL)
+    return nm.NEAREST_ANY, (strand == "-" if up else strand != "-")
+
+
 def nearest_distance(
     self: GenomicRanges,
     other: GenomicRanges,
@@ -119,20 +144,7 @@ def nearest_distance(
         return GenomicRanges(full.df.select(*self.df.columns, dist_col))
     odf, keys = self._binary_prepared(other, strand_behavior, match_by)
     bin_size = self.resolve_bin(bin_size)
-    leg_pred = None  # per-row leg selection for upstream/downstream
-    if direction in (nm.NEAREST_UPSTREAM, nm.NEAREST_DOWNSTREAM):
-        # Same resolution as nearest_ranges: unstranded input degrades to the
-        # single genomic direction; stranded input routes each row to the leg
-        # its 5' direction selects (upstream of '+' = backward; of '-' =
-        # forward). A NULL Strand selects neither leg: overlap only.
-        up = direction == nm.NEAREST_UPSTREAM
-        if not self.has_strand:
-            direction = nm.NEAREST_BACKWARD if up else nm.NEAREST_FORWARD
-        else:
-            leg_pred = (
-                F.col(nm.STRAND_COL) == "-" if up else F.col(nm.STRAND_COL) != "-"
-            )
-            direction = nm.NEAREST_ANY
+    direction, leg_pred = _resolve_legs(self, direction)
 
     # Class 0: self row at its End; class 1: other row at its Start. A point
     # without a position belongs to no bucket (and would sort into every
@@ -235,35 +247,15 @@ def nearest_ranges(
     faithful."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    leg_pred = None  # per-row leg selection for upstream/downstream
-    if direction in (nm.NEAREST_UPSTREAM, nm.NEAREST_DOWNSTREAM):
-        # 5'/3'-aware resolution (reference wrapper pyranges_main.py:2327-2391
-        # splits self by strand; we additionally flip the genomic direction on
-        # the '-' half, which is the documented upstream/downstream intent —
-        # the reference's literal code passes the same direction to both
-        # halves, which its own doctests never exercise).
-        #
-        # Physical strategy (r12): NOT a strand-split recursion — that ran
-        # the whole rank machinery twice (two stable-id persists, two
-        # overlap joins, two best-windows; the gated upstream query cost
-        # ~3x plain nearest). Both direction legs already exist in the
-        # direction='any' plan, so build them ONCE over the full input and
-        # give each leg only the LEFT rows whose strand selects it: the
-        # forward sweep sees the rows whose 5'-direction maps to forward,
-        # the backward sweep the rest. Right-side ranks, the overlap
-        # branch (distance-0 candidates count for every row, as in the
-        # split version), the best-k window and the assembly joins all run
-        # once.
-        up = direction == nm.NEAREST_UPSTREAM
-        if not self.has_strand:
-            direction = nm.NEAREST_BACKWARD if up else nm.NEAREST_FORWARD
-        else:
-            # forward leg serves: '-' rows for upstream, '+'/other rows for
-            # downstream (upstream of '+' = smaller coordinates = backward).
-            leg_pred = (
-                F.col(nm.STRAND_COL) == "-" if up else F.col(nm.STRAND_COL) != "-"
-            )
-            direction = nm.NEAREST_ANY
+    # Upstream/downstream (r12): NOT a strand-split recursion — that ran the
+    # whole rank machinery twice (two stable-id persists, two overlap joins,
+    # two best-windows; the gated upstream query cost ~3x plain nearest).
+    # Both direction legs already exist in the direction='any' plan, so
+    # build them ONCE over the full input and give each leg only the LEFT
+    # rows whose strand selects it. Right-side ranks, the overlap branch
+    # (distance-0 candidates count for every row, as in the split version),
+    # the best-k window and the assembly joins all run once.
+    direction, leg_pred = _resolve_legs(self, direction)
     odf, keys = self._binary_prepared(other, strand_behavior, match_by)
     bin_size = self.resolve_bin(bin_size)
     # Each stable-id relation feeds several plan branches; persist it so the

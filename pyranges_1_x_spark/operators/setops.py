@@ -45,7 +45,6 @@ def subtract_overlaps(
     blockers, bkeys = rename_keys(
         island_agg(
             odf.select(*keys, nm.START_COL, nm.END_COL), keys, bucket_width=bin_size * 16,
-            adaptive=True,
         )
         .withColumnRenamed(nm.START_COL, "__bs__")
         .withColumnRenamed(nm.END_COL, "__be__")
@@ -182,7 +181,6 @@ def complement_ranges(
         self.df.select(*keys, nm.START_COL, nm.END_COL),
         keys,
         bucket_width=self.resolve_bin(None) * 16,
-        adaptive=True,
     )
     # (Start, End) — not Start alone: merged islands are strict-overlap
     # disjoint but a zero-length island can TIE a neighbor's Start
@@ -240,7 +238,7 @@ def set_union_overlaps(
     cols = [*keys, nm.START_COL, nm.END_COL]
     both = self.df.select(*cols).unionByName(odf.select(*cols))
     return GenomicRanges(
-        island_agg(both, keys, bucket_width=self.resolve_bin(None) * 16, adaptive=True)
+        island_agg(both, keys, bucket_width=self.resolve_bin(None) * 16)
     )
 
 
@@ -260,9 +258,9 @@ def set_intersect_overlaps(
     odf, keys = self._binary_prepared(other, strand_behavior)
     bin_size = self.resolve_bin(bin_size)
     cols = [*keys, nm.START_COL, nm.END_COL]
-    a = island_agg(self.df.select(*cols), keys, bucket_width=bin_size * 16, adaptive=True)
+    a = island_agg(self.df.select(*cols), keys, bucket_width=bin_size * 16)
     b, bkeys = rename_keys(
-        island_agg(odf.select(*cols), keys, bucket_width=bin_size * 16, adaptive=True)
+        island_agg(odf.select(*cols), keys, bucket_width=bin_size * 16)
         .withColumnRenamed(nm.START_COL, "__bs__")
         .withColumnRenamed(nm.END_COL, "__be__"),
         keys,

@@ -458,7 +458,7 @@ def top1_overlap(
     to SortAggregate — two full sorts of the pair relation keyed by ``key``
     alone. The window sorts by ``(key, rstart, rend)`` once per exchange
     side and short-circuits at the first row per key (r16 interleaved A/B,
-    scripts/ab_join_first_r16.py: B faster 5/5 rounds, min 2.20 -> 1.55s at
+    OPTIMIZATION_r16.md §1: B faster 5/5 rounds, min 2.20 -> 1.55s at
     sf0.1; SortAggregate 2 -> 0, WindowGroupLimit 0 -> 2; values identical
     on 599,967 rows — among exact (rstart, rend) ties both forms pick an
     arbitrary match, the documented reference behavior).

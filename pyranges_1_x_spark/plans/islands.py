@@ -27,14 +27,12 @@ island scan is a running ``max(End)`` — associative — so it splits:
 
 Cost shape: one full-width shuffle on (keys, bucket) — whose exchange Catalyst
 reuses for the phase-3 summary branch (ReusedExchange; the bucket-local window
-sort runs twice) — plus two summary-sized broadcasts. Callers that already pay
-for a cache can persist the input. ``bucket_width=None`` (or 0) falls back to
-the single-window-per-keys plan for bounded inputs.
+sort runs twice) — plus two summary-sized broadcasts. Inputs whose size
+estimate is small take the single-window-per-keys plan instead (see
+``DEFAULT_SINGLE_WINDOW_BYTES``); ``bucket_width=None`` (or 0) forces it.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -56,8 +54,7 @@ DEFAULT_ISLAND_BUCKET = DEFAULT_BIN_SIZE * 16
 #: the scale-killer the bucketed plan exists to avoid. 256 MB spread over a
 #: genome's ~25 chromosomes is ~10 MB per key-group task — far below task
 #: spill territory — and join-bearing inputs inflate their estimate, which
-#: errs toward the bucketed (scale-safe) side. Override with
-#: SPARK_GRAFT_ISLAND_SINGLE_WINDOW_BYTES (0 forces bucketed always).
+#: errs toward the bucketed (scale-safe) side.
 DEFAULT_SINGLE_WINDOW_BYTES = 256 << 20
 
 
@@ -75,16 +72,11 @@ def _single_window_ok(df: DataFrame) -> bool:
     (mcc build 4.8s -> ~1s at sf0.1). Without pushdown pruning the
     analyzed estimate can only overshoot, which errs toward the bucketed
     (scale-safe) side."""
-    threshold = int(
-        os.environ.get("SPARK_GRAFT_ISLAND_SINGLE_WINDOW_BYTES", DEFAULT_SINGLE_WINDOW_BYTES)
-    )
-    if threshold <= 0:
-        return False
     try:
         est = int(df._jdf.queryExecution().analyzed().stats().sizeInBytes())
     except Exception:  # noqa: BLE001
         return False
-    return est <= threshold
+    return est <= DEFAULT_SINGLE_WINDOW_BYTES
 
 
 def _is_new(prev_max, slack: int):
@@ -102,8 +94,6 @@ def assign_islands(
     island_col: str = ISLAND_COL,
     tiebreak: list[str] | None = None,
     bucket_width: int | None = DEFAULT_ISLAND_BUCKET,
-    adaptive: bool = False,
-    materialize: bool = False,
 ) -> DataFrame:
     """Attach a per-group island id (0-based within each key-group).
 
@@ -113,28 +103,20 @@ def assign_islands(
     identical rows, which always co-island); ``tiebreak`` columns additionally
     pin the scan order so downstream per-island sorts are fully deterministic.
 
-    With ``adaptive=True`` (what the operator layer passes), a numeric
-    ``bucket_width`` is a CEILING, not a mandate — when Catalyst's size
-    estimate says the input fits comfortably in one task per key-group (see
-    ``DEFAULT_SINGLE_WINDOW_BYTES``), the single-window plan runs instead.
-    ``bucket_width=None``/``0`` forces the single-window plan unconditionally;
-    ``adaptive=False`` with a numeric width forces the bucketed plan (how the
-    cross-bucket unit tests pin the two-phase path).
+    A numeric ``bucket_width`` is a CEILING, not a mandate: when Catalyst's
+    size estimate says the input fits comfortably in one task per key-group
+    (see ``DEFAULT_SINGLE_WINDOW_BYTES``), the single-window plan runs
+    instead. ``bucket_width=None``/``0`` forces the single-window plan.
 
-    ``materialize`` (r16, VERDICT r15 #7): in the bucketed plan the
-    bucket-tagged input feeds TWO branches that never canonicalize equal
-    (the phase-2 groupBy summary and the phase-1 window), so an
-    upstream-derived input is evaluated twice end to end. ``True`` runs it
-    once via a tracked persist (caller releases with ``free_tracked()``).
-    Default ``False``: the honest A/B at the bucketed plan's firing shape
-    (scripts/ab_islands_mat_r16.py, 6M-row derived input, bucketed plan
-    FORCED via SPARK_GRAFT_ISLAND_SINGLE_WINDOW_BYTES=0) measured the
-    persist a consistent LOSS locally (see OPTIMIZATION_r16.md) — the
+    The bucketed plan's bucket-tagged input feeds TWO branches that never
+    canonicalize equal (the phase-2 groupBy summary and the phase-1 window),
+    so an upstream-derived input is evaluated twice. It is deliberately not
+    persisted: at the firing shape (6M-row derived union input, bucketed
+    plan forced, values identical) a tracked persist lost 4/4 interleaved
+    rounds, min 6.90s without vs 8.92s with (OPTIMIZATION_r16.md §8) — the
     phase-2 summary re-scan is cheaper than writing+reading the cache.
-    Pass ``True`` when the input subtree is expensive (wide joins, UDF
-    stages) rather than scan-shaped.
     """
-    if adaptive and bucket_width and _single_window_ok(df):
+    if bucket_width and _single_window_ok(df):
         bucket_width = None
     order = [F.col(START_COL).asc(), F.col(END_COL).asc()] + [
         F.col(c).asc() for c in (tiebreak or [])
@@ -152,10 +134,6 @@ def assign_islands(
 
     bkt = "__ibkt__"
     d = df.withColumn(bkt, floordiv(F.col(START_COL), bucket_width))
-    if materialize:
-        from pyranges_1_x_spark.plans.qcache import persist_tracked
-
-        d = persist_tracked(d)
 
     # Phase 2 summary first (cheap pruned scan + map-side-combined agg):
     # patch = max(End) over all earlier buckets of the same key-group.
@@ -215,14 +193,11 @@ def island_agg(
     count_col: str | None = None,
     tiebreak: list[str] | None = None,
     bucket_width: int | None = DEFAULT_ISLAND_BUCKET,
-    adaptive: bool = False,
-    materialize: bool = False,
 ) -> DataFrame:
     """Merge overlapping intervals per key-group (the `merge` kernel equivalent).
 
     Returns one row per island: keys..., Start=min, End=max [, count_col].
-    ``materialize`` forwards to :func:`assign_islands` (bucketed-plan
-    duplicate-evaluation knob).
+    Plan selection as in :func:`assign_islands`.
     """
     with_islands = assign_islands(
         df,
@@ -230,8 +205,6 @@ def island_agg(
         slack=slack,
         tiebreak=tiebreak,
         bucket_width=bucket_width,
-        adaptive=adaptive,
-        materialize=materialize,
     )
     aggs = [
         F.min(START_COL).alias(START_COL),

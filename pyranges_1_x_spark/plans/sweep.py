@@ -19,23 +19,20 @@ position. Empty buckets are skipped naturally (bucket ids come from the data).
 Consumers: coverage, coverage_ratio, split, count_overlaps_matrix — every
 event-point operator in the engine.
 
-r15 (optimization round): ``prefix_sweep`` persists the pre-aggregated
-delta relation (MEMORY_AND_DISK) for the duration of the plan. The delta
-subtree feeds TWO branches (bucket-local windows + bucket summary), the
-branches prune different columns, so Catalyst/AQE never shares their
-exchanges (verified at runtime: 0 ReusedExchange) — before r15 the subtree,
-which contains a full groupBy shuffle in every consumer, was evaluated
-twice. Persisting the post-aggregation rows trades one executor-local
-block write/read for that second shuffle — cheaper at every scale, and
-``persist`` (unlike ``localCheckpoint``) keeps lineage, so executor loss
-recomputes instead of failing. Interleaved A/B at sf0.1 (all four
-consumers): coverage 2.23→1.80s, coverage_ratio 2.24→1.80s, split
-2.27→1.85s, count_matrix 7.29→4.35s. r16: the persist is TRACKED
-(plans/qcache.py) — CacheManager holds persisted plans strongly, so the
-caller must release via ``free_tracked()`` once the result is consumed
-(the r15 "ContextCleaner reclaims on plan drop" comment was wrong).
-``materialize=False`` restores the recompute shape (e.g. for callers
-that already persist their deltas).
+``prefix_sweep`` always persists the pre-aggregated delta relation
+(MEMORY_AND_DISK) for the duration of the plan. The delta subtree feeds TWO
+branches (bucket-local windows + bucket summary) that prune different
+columns, so Catalyst/AQE never shares their exchanges (verified at runtime:
+0 ReusedExchange); without the persist the subtree, which contains a full
+groupBy shuffle in every consumer, is evaluated twice. Persisting the
+post-aggregation rows trades one executor-local block write/read for that
+second shuffle — cheaper at every scale, and ``persist`` (unlike
+``localCheckpoint``) keeps lineage, so executor loss recomputes instead of
+failing. Interleaved A/B at sf0.1 (all four consumers, OPTIMIZATION_r15.md
+§2): coverage 2.23→1.80s, coverage_ratio 2.24→1.80s, split 2.27→1.85s,
+count_matrix 7.29→4.35s. The persist is TRACKED (plans/qcache.py):
+CacheManager holds persisted plans strongly, so the caller releases it via
+``free_tracked()`` once the result is consumed.
 
 ``asof_extreme``/``bucketed_row_number`` keep the recompute shape: their
 points relations are unions of already-persisted inputs (nearest_ranges) or
@@ -51,6 +48,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyranges_1_x_spark.plans.interval_join import floordiv
+from pyranges_1_x_spark.plans.qcache import persist_tracked
 
 __all__ = ["prefix_sweep", "asof_extreme", "bucketed_row_number"]
 
@@ -64,21 +62,16 @@ def prefix_sweep(
     *,
     bucket_width: int,
     next_col: str = "__next__",
-    materialize: bool = True,
 ) -> DataFrame:
     """``deltas`` must have one row per (keys..., pos) — pre-aggregated deltas.
 
     Returns keys + pos + the running sum of each delta column (ordered by pos
     within keys, inclusive of the current row) as ``cum_cols`` + ``next_col``
     (the next position within keys; null on each group's last point).
-    ``materialize`` persists the deltas for the two consuming branches —
-    see the module docstring (r15).
+    The deltas are persisted (tracked) for the two consuming branches — see
+    the module docstring.
     """
-    if materialize:
-        from pyranges_1_x_spark.plans.qcache import persist_tracked
-
-        deltas = persist_tracked(deltas)
-    d = deltas.withColumn("__bkt__", floordiv(F.col(pos_col), bucket_width))
+    d = persist_tracked(deltas).withColumn("__bkt__", floordiv(F.col(pos_col), bucket_width))
 
     wl = Window.partitionBy(*keys, "__bkt__").orderBy(F.col(pos_col).asc())
     wlc = wl.rowsBetween(Window.unboundedPreceding, Window.currentRow)

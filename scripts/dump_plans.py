@@ -1,6 +1,6 @@
-"""Dump .explain("formatted") for queries() entries to plans/r15/<q>_<tag>.txt.
+"""Dump .explain("formatted") for queries() entries to <out_dir>/<q>_<tag>.txt.
 
-Usage: python scripts/dump_plans_r15.py <tag> [query ...]
+Usage: python scripts/dump_plans.py <out_dir> <tag> [query ...]
 
 Builds each query's DataFrame against $SPARK_GRAFT_SF_DIR (default sf0.1)
 under the SAME session configuration bench.py uses, so the committed plan
@@ -18,8 +18,8 @@ sys.path.insert(0, ".")
 
 
 def main() -> int:
-    tag = sys.argv[1]
-    only = set(sys.argv[2:])
+    out_dir, tag = sys.argv[1], sys.argv[2]
+    only = set(sys.argv[3:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -29,7 +29,7 @@ def main() -> int:
 
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
-        .appName("plan-dump-r15")
+        .appName("plan-dump")
         .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.driver.memory", "16g")
@@ -39,7 +39,6 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r15")
     os.makedirs(out_dir, exist_ok=True)
 
     for name, fn in entrymod.queries().items():

@@ -75,9 +75,11 @@ def test_bucketed_islands_match_single_window(spark):
     df = spark.createDataFrame(rows, "Chromosome string, Start long, End long, rid long")
 
     def memberships(bucket_width):
-        out = assign_islands(
-            df, ["Chromosome"], bucket_width=bucket_width, tiebreak=["rid"]
-        ).collect()
+        out = assign_islands(df, ["Chromosome"], bucket_width=bucket_width, tiebreak=["rid"])
+        if bucket_width:
+            # createDataFrame input has unknown stats: the bucketed plan runs
+            assert "__ibkt__" in out._jdf.queryExecution().executedPlan().toString()
+        out = out.collect()
         isl = {}
         for r in out:
             isl.setdefault((r["Chromosome"], r["__island__"]), set()).add(r["rid"])
@@ -103,9 +105,10 @@ def test_bucketed_islands_slack_and_bookends(spark):
 
 
 def test_adaptive_plan_selection(spark, monkeypatch):
-    """adaptive=True picks single-window for small-stats inputs, keeps the
-    bucketed two-phase plan when the size estimate exceeds the threshold
-    (VERDICT r6 #2); adaptive=False always honors the numeric width."""
+    """A numeric bucket_width picks single-window for small-stats inputs and
+    keeps the bucketed two-phase plan when the size estimate exceeds the
+    threshold (VERDICT r6 #2)."""
+    from pyranges_1_x_spark.plans import islands
     from pyranges_1_x_spark.plans.islands import assign_islands
 
     # NOTE: built from range(), not createDataFrame — a Python LogicalRDD has
@@ -115,21 +118,20 @@ def test_adaptive_plan_selection(spark, monkeypatch):
         "'c' as Chromosome", "id * 10 as Start", "id * 10 + 5 as End"
     )
 
-    def has_bucket(adaptive):
+    def has_bucket():
         plan = (
-            assign_islands(df, ["Chromosome"], bucket_width=4, adaptive=adaptive)
+            assign_islands(df, ["Chromosome"], bucket_width=4)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
         )
         return "__ibkt__" in plan
 
-    # small input + adaptive => single window; explicit width always bucketed
-    assert not has_bucket(adaptive=True)
-    assert has_bucket(adaptive=False)
-    # threshold 0 disables the fallback: adaptive inputs stay bucketed
-    monkeypatch.setenv("SPARK_GRAFT_ISLAND_SINGLE_WINDOW_BYTES", "0")
-    assert has_bucket(adaptive=True)
+    # small input => single window
+    assert not has_bucket()
+    # threshold 0: nothing is small enough, inputs stay bucketed
+    monkeypatch.setattr(islands, "DEFAULT_SINGLE_WINDOW_BYTES", 0)
+    assert has_bucket()
     # a 1-byte threshold says nothing is small enough either
-    monkeypatch.setenv("SPARK_GRAFT_ISLAND_SINGLE_WINDOW_BYTES", "1")
-    assert has_bucket(adaptive=True)
+    monkeypatch.setattr(islands, "DEFAULT_SINGLE_WINDOW_BYTES", 1)
+    assert has_bucket()

@@ -2914,6 +2914,39 @@ def test_pq_encode_and_adc_topk(spark):
     top2 = pq_topk(df.union(bad), q, cb, k=5).toPandas()
     assert 9 not in set(top2.vec_id) and len(top2) == 4
 
+    # Seeded random grid: the Arrow scorer's adist is bit-identical to the
+    # fold codes summed through the ADC table, row by row. Centroid 5 of
+    # every subspace duplicates centroid 2 (an exact distance tie -> first
+    # index), and row 0 carries one NULL element (NULL fold code -> excluded).
+    import random
+
+    rng = random.Random(2024)
+    m, kc, dsub = 4, 8, 2
+    cb = [[[rng.uniform(-1, 1) for _ in range(dsub)] for _ in range(kc)] for _ in range(m)]
+    for sub in cb:
+        sub[5] = list(sub[2])
+    rows = [(i, [rng.uniform(-1.5, 1.5) for _ in range(m * dsub)]) for i in range(200)]
+    rows[0][1][1] = None
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = [rng.uniform(-1, 1) for _ in range(m * dsub)]
+    table = pq_adc_table(q, cb)
+    fold_codes = {
+        r.vec_id: list(r.c)
+        for r in df.select("vec_id", pq_encode(F.col("embedding"), cb).alias("c")).collect()
+    }
+    assert fold_codes[0][0] is None
+    assert all(5 not in c for c in fold_codes.values())
+    assert any(c[s] == 2 for c in fold_codes.values() for s in range(m))
+    expected = {
+        i: sum(table[s][c[s]] for s in range(m)).hex()
+        for i, c in fold_codes.items()
+        if None not in c
+    }
+    got = {
+        r.vec_id: r.adist.hex() for r in pq_topk(df, q, cb, k=len(rows)).collect()
+    }
+    assert got == expected and 0 not in got
+
 
 def test_ivfpq_composition(spark):
     """The classic IVF-PQ stack (Jegou et al. IVFADC): ivf_assign prunes to
