@@ -22,24 +22,23 @@ def fdr(df: DataFrame, p_col: str = "PValue", out_col: str = "FDR") -> DataFrame
     from the largest p downward (the monotonicity enforcement step).
 
     Fully two-phase — no global serial window at any step: n is a broadcast
-    scalar, the global p-rank comes from ``bucketed_row_number`` over the
+    scalar, the global p-rank is a ``row_number`` ``bucketed_scan`` over the
     scaled-p bucket axis, and the BH suffix min is ``asof_extreme`` on the
     rank axis (bucket-local running min patched with later buckets' minima
     via the one-row-per-bucket summary)."""
-    from pyranges_1_x_spark.plans.sweep import asof_extreme, bucketed_row_number
+    from pyranges_1_x_spark.plans.interval_join import floordiv
+    from pyranges_1_x_spark.plans.sweep import Scan, asof_extreme, bucketed_scan
 
     n_row = df.agg(F.count(F.lit(1)).cast("double").alias("__n__"))
     d = df.crossJoin(F.broadcast(n_row))
     # p in [0, 1] -> integer bucket axis; equal p always shares a bucket.
     d = d.withColumn("__pp__", F.floor(F.col(p_col) * F.lit(1e9)).cast("long"))
-    d = bucketed_row_number(
-        d,
+    d = bucketed_scan(
+        d.withColumn("__bkt__", floordiv(F.col("__pp__"), 4_000_000)),
         [],
-        "__pp__",
-        [F.col(p_col).asc(), F.monotonically_increasing_id()],
-        bucket_width=4_000_000,
-        out_col="__rk__",
-    )
+        "__bkt__",
+        [Scan("__rk__", "row_number", None, [F.col(p_col).asc(), F.monotonically_increasing_id()])],
+    ).drop("__bkt__")
     d = d.withColumn("__raw__", F.col(p_col) * F.col("__n__") / F.col("__rk__"))
     # r15: the suffix-min sweep evaluates its input under TWO plan branches
     # (bucket-local window + bucket summary — sweep.py's documented trade),

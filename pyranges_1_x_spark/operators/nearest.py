@@ -5,10 +5,14 @@ pyranges_main.py:2143-2391). Distance convention (doctest-verified):
 overlapping pairs have Distance 0; non-overlapping (incl. touching) have
 ``gap + 1`` (touching => 1). Rows with no eligible neighbor are dropped.
 
+Both operators first drop invalid rows from both inputs (``_valid_rows``):
+a NULL Start, a NULL End or Start > End has no neighbor and is nobody's
+neighbor.
+
 ``nearest_distance`` (self rows + Distance, no other columns) is ONE
-two-phase bucketed sweep. Each self row becomes a point at its End carrying
-the whole row as a struct; each other row a point at its Start carrying its
-End. Per (keys, position bucket) two windows give, at every self point:
+``plans/sweep.py:bucketed_scan`` call. Each self row becomes a point at its
+End carrying the whole row as a struct; each other row a point at its Start
+carrying its End. Three scans give, at every self point:
 
 * ``M`` — max other End among other Starts < End (ascending, self first at
   ties, frame up to the row before);
@@ -16,24 +20,18 @@ End. Per (keys, position bucket) two windows give, at every self point:
   End over the same rows (descending, other first at ties, frame up to the
   current row).
 
-Each is patched with the earlier/later buckets' extreme from a
-one-row-per-bucket summary, broadcast back (the two-phase posture of
-plans/sweep.py:asof_extreme: parallelism = #buckets, not #chromosomes).
 Per row: overlap <=> ``M > Start`` (binned_exists' predicate); forward =
 ``F - End + 1``; backward = ``Start - M + 1`` when nothing overlaps — then
 the other rows starting before End are exactly those ending at or before
 Start, bar one empty at the point where the self row is empty (``G ==
 Start``, backward distance 1). One shuffle of the points; no row ids, no
-persist, no join back. Invalid rows (see ``invalid_ranges``) can differ from
-``nearest_ranges``: a self row with Start > End can miss a backward candidate
-that starts at or after its End, and an other row with a NULL Start is
-nobody's neighbor here.
+persist, no join back.
 
 ``nearest_ranges`` (k nearest, with the other rows' columns) must recover
 WHICH other rows are nearest, which those per-row extremes do not carry. For
 each direction it unions the two frames' boundary points into one stream per
 group and runs the bucketed as-of sweep (plans/sweep.py:asof_extreme) over
-the other frame's bucketed ranks (plans/sweep.py:bucketed_row_number);
+the other frame's ranks (a ``row_number`` bucketed_scan);
 overlap candidates (distance 0) come from the shared binned interval join.
 Because candidates come from SEVERAL plan branches that must be re-joined
 per input row, row identity uses the deterministic content-hash id
@@ -76,7 +74,7 @@ what lets its three terms share one sweep.
 
 from __future__ import annotations
 
-from pyspark.sql import Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyranges_1_x_spark import names as nm
@@ -84,9 +82,17 @@ from pyranges_1_x_spark.core import GenomicRanges
 from pyranges_1_x_spark.plans.ids import STABLE_ID_COLS, with_stable_id
 from pyranges_1_x_spark.plans.interval_join import binned_join, floordiv, rename_keys
 from pyranges_1_x_spark.plans.qcache import persist_tracked
-from pyranges_1_x_spark.plans.sweep import asof_extreme, bucketed_row_number
+from pyranges_1_x_spark.plans.sweep import Scan, asof_extreme, bucketed_scan
 
 _SID = STABLE_ID_COLS
+
+
+def _valid_rows(df: DataFrame) -> DataFrame:
+    """The rows both nearest operators see: a row with a NULL Start, a NULL
+    End or Start > End has no neighbor and is nobody's neighbor (the
+    comparison is NULL, so the filter drops NULL coordinates too). Empty
+    rows (Start == End) stay."""
+    return df.filter(F.col(nm.START_COL) <= F.col(nm.END_COL))
 
 
 def _resolve_legs(self: GenomicRanges, direction: str):
@@ -146,67 +152,37 @@ def nearest_distance(
     bin_size = self.resolve_bin(bin_size)
     direction, leg_pred = _resolve_legs(self, direction)
 
-    # Class 0: self row at its End; class 1: other row at its Start. A point
-    # without a position belongs to no bucket (and would sort into every
-    # bucket's patch below), so it is dropped up front.
+    # Class 0: self row at its End; class 1: other row at its Start.
     pts = (
-        self.df.select(
+        _valid_rows(self.df).select(
             *keys, F.col(nm.END_COL).alias("__pos__"), F.lit(0).alias("__cls__"),
             F.struct(*self.df.columns).alias("__row__"),
         )
         .unionByName(
-            odf.select(
+            _valid_rows(odf).select(
                 *keys, F.col(nm.START_COL).alias("__pos__"), F.lit(1).alias("__cls__"),
                 F.col(nm.END_COL).alias("__re__"),
             ),
             allowMissingColumns=True,
         )
-        .filter(F.col("__pos__").isNotNull())
         .withColumn("__bkt__", floordiv(F.col("__pos__"), bin_size))
     )
     is_other = F.col("__cls__") == 1
     o_start = F.when(is_other, F.col("__pos__"))
     o_end = F.when(is_other, F.col("__re__"))
-
-    in_bucket = Window.partitionBy(*keys, "__bkt__")
-    before = in_bucket.orderBy(F.col("__pos__").asc(), F.col("__cls__").asc()).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    at_or_after = in_bucket.orderBy(
-        F.col("__pos__").desc(), F.col("__cls__").desc()
-    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    local = pts.select(
-        *keys, "__bkt__", "__cls__", "__row__",
-        F.max(o_end).over(before).alias("__lm__"),
-        F.min(o_start).over(at_or_after).alias("__lf__"),
-        F.min(o_end).over(at_or_after).alias("__lg__"),
-    ).filter(F.col("__cls__") == 0)
-
     # Buckets partition the position axis, so every other point in an
     # earlier bucket starts before this End and every one in a later bucket
     # after it.
-    buckets = Window.partitionBy(*keys)
-    earlier = buckets.orderBy(F.col("__bkt__").asc()).rowsBetween(Window.unboundedPreceding, -1)
-    later = buckets.orderBy(F.col("__bkt__").desc()).rowsBetween(Window.unboundedPreceding, -1)
-    summary = (
-        pts.groupBy(*keys, "__bkt__")
-        .agg(
-            F.max(o_end).alias("__tm__"), F.min(o_start).alias("__tf__"),
-            F.min(o_end).alias("__tg__"),
-        )
-        .select(
-            *keys, "__bkt__",
-            F.max("__tm__").over(earlier).alias("__pm__"),
-            F.min("__tf__").over(later).alias("__pf__"),
-            F.min("__tg__").over(later).alias("__pg__"),
-        )
-    )
-
-    swept = local.join(F.broadcast(summary), on=[*keys, "__bkt__"]).select(
-        "__row__.*",
-        F.greatest("__lm__", "__pm__").alias("__m__"),
-        F.least("__lf__", "__pf__").alias("__f__"),
-        F.least("__lg__", "__pg__").alias("__g__"),
+    before = [F.col("__pos__").asc(), F.col("__cls__").asc()]
+    at_or_after = [F.col("__pos__").desc(), F.col("__cls__").desc()]
+    swept = (
+        bucketed_scan(pts, keys, "__bkt__", [
+            Scan("__m__", "max", o_end, before, inclusive=False),
+            Scan("__f__", "min", o_start, at_or_after, desc=True),
+            Scan("__g__", "min", o_end, at_or_after, desc=True),
+        ])
+        .filter(F.col("__cls__") == 0)
+        .select("__row__.*", "__m__", "__f__", "__g__")
     )
     start, end = F.col(nm.START_COL), F.col(nm.END_COL)
     m, f, g = F.col("__m__"), F.col("__f__"), F.col("__g__")
@@ -262,9 +238,9 @@ def nearest_ranges(
     # id shuffle + input scan run once. Tracked (plans/qcache.py):
     # CacheManager holds persisted plans strongly, so the caller releases
     # via free_tracked().
-    left = persist_tracked(with_stable_id(self.df))
+    left = persist_tracked(with_stable_id(_valid_rows(self.df)))
     rsid = ["__rid1__", "__rid2__", "__rdr__"]
-    right = persist_tracked(with_stable_id(odf))
+    right = persist_tracked(with_stable_id(_valid_rows(odf)))
     for a, b in zip(STABLE_ID_COLS, rsid):
         right = right.withColumnRenamed(a, b)
     rcoords = right.select(
@@ -302,11 +278,11 @@ def nearest_ranges(
     if direction in (nm.NEAREST_ANY, nm.NEAREST_FORWARD):
         # Global forward rank (grows with Start) via the bucketed two-phase
         # row_number — no per-chromosome serial window.
-        r_fwd = bucketed_row_number(
-            rcoords, keys, "__rs__",
-            [F.col("__rs__").asc(), F.col("__re__").asc(), *[F.col(c).asc() for c in rsid]],
-            bucket_width=bin_size, out_col="__rr__",
-        )
+        fwd_order = [F.col("__rs__").asc(), F.col("__re__").asc(), *[F.col(c).asc() for c in rsid]]
+        r_fwd = bucketed_scan(
+            rcoords.withColumn("__bkt__", floordiv(F.col("__rs__"), bin_size)), keys, "__bkt__",
+            [Scan("__rr__", "row_number", None, fwd_order)],
+        ).drop("__bkt__")
         # sweep: per left End, the min forward rank (rank grows with Start,
         # so min rank among Start >= End is the as-of candidate). Under a
         # per-row leg (upstream/downstream), only the rows whose strand
@@ -357,11 +333,13 @@ def nearest_ranges(
         cands.append(fwd)
     if direction in (nm.NEAREST_ANY, nm.NEAREST_BACKWARD):
         # Global backward rank (grows as End decreases), bucketed likewise.
-        r_bwd = bucketed_row_number(
-            rcoords, keys, "__re__",
-            [F.col("__re__").desc(), F.col("__rs__").desc(), *[F.col(c).asc() for c in rsid]],
-            bucket_width=bin_size, descending=True, out_col="__rr__",
-        )
+        bwd_order = [
+            F.col("__re__").desc(), F.col("__rs__").desc(), *[F.col(c).asc() for c in rsid]
+        ]
+        r_bwd = bucketed_scan(
+            rcoords.withColumn("__bkt__", floordiv(F.col("__re__"), bin_size)), keys, "__bkt__",
+            [Scan("__rr__", "row_number", None, bwd_order, desc=True)],
+        ).drop("__bkt__")
         l_bwd = left.filter(~leg_pred) if leg_pred is not None else left
         l_pts = l_bwd.select(
             *keys, *_SID, F.col(nm.START_COL).alias("__pos__"), F.col(nm.START_COL).alias("__ls__")

@@ -42,6 +42,9 @@ def sort_ranges(
     ``rank_col`` additionally materializes the resulting global position as a
     column (1-based) — Spark DataFrames have no row order once shuffled, so a
     persisted rank is the faithful equivalent of the reference's ordered frame.
+    Its two-phase rank stays hand-written rather than a
+    ``plans/sweep.py:bucketed_scan``: the summary prefix runs in ONE
+    unpartitioned natural-sort order over (Chromosome, Strand, bucket).
 
     5'-aware sorting (use_strand: '-' rows descending) follows in round 2 with
     the local-coordinate family.

@@ -9,25 +9,13 @@ function: sort by Start and flag a new island whenever
 cluster_overlaps doctest (``core/pyranges_main.py:700-745``: slack=0 does NOT
 merge bookended intervals, slack=1 does).
 
-Scale posture — two-phase bucketed scan (same decomposition as
-``plans/sweep.py``): a plain ``Window.partitionBy(keys)`` puts a whole
-chromosome in ONE task (~25-way parallelism cap no matter the cluster). The
-island scan is a running ``max(End)`` — associative — so it splits:
-
-1. bucket the Start axis (``floor(Start / bucket_width)``; bucket order is
-   consistent with Start order, ties always share a bucket) and compute the
-   bucket-local exclusive running max(End) per (keys, bucket) — parallelism =
-   #buckets;
-2. patch each bucket with ``max(End)`` of all EARLIER buckets, prefix-scanned
-   over the tiny one-row-per-bucket summary and broadcast back. A row's true
-   preceding-max is ``greatest(local, patch)``, which decides ``is_new``
-   row-locally;
-3. the island id (global prefix count of ``is_new``) decomposes the same way:
-   bucket-local cumsum + the broadcast prefix total of earlier buckets.
-
-Cost shape: one full-width shuffle on (keys, bucket) — whose exchange Catalyst
-reuses for the phase-3 summary branch (ReusedExchange; the bucket-local window
-sort runs twice) — plus two summary-sized broadcasts. Inputs whose size
+Scale posture: a plain ``Window.partitionBy(keys)`` puts a whole chromosome
+in ONE task (~25-way parallelism cap no matter the cluster). The island scan
+is a running ``max(End)`` — associative — so it runs as two chained
+``plans/sweep.py:bucketed_scan`` passes over Start buckets
+(``floor(Start / bucket_width)``; ties share a bucket): the exclusive running
+max(End), patched from earlier buckets, decides ``is_new`` row-locally, and
+the island id is the inclusive running sum of ``is_new``. Inputs whose size
 estimate is small take the single-window-per-keys plan instead (see
 ``DEFAULT_SINGLE_WINDOW_BYTES``); ``bucket_width=None`` (or 0) forces it.
 """
@@ -39,6 +27,7 @@ from pyspark.sql import functions as F
 
 from pyranges_1_x_spark.names import DEFAULT_BIN_SIZE, END_COL, ISLAND_COL, START_COL
 from pyranges_1_x_spark.plans.interval_join import floordiv
+from pyranges_1_x_spark.plans.sweep import Scan, bucketed_scan
 
 __all__ = ["assign_islands", "island_agg"]
 
@@ -109,8 +98,8 @@ def assign_islands(
     instead. ``bucket_width=None``/``0`` forces the single-window plan.
 
     The bucketed plan's bucket-tagged input feeds TWO branches that never
-    canonicalize equal (the phase-2 groupBy summary and the phase-1 window),
-    so an upstream-derived input is evaluated twice. It is deliberately not
+    canonicalize equal (the bucket summary and the bucket-local window), so
+    an upstream-derived input is evaluated twice. It is deliberately not
     persisted: at the firing shape (6M-row derived union input, bucketed
     plan forced, values identical) a tracked persist lost 4/4 interleaved
     rounds, min 6.90s without vs 8.92s with (OPTIMIZATION_r16.md §8) — the
@@ -134,55 +123,12 @@ def assign_islands(
 
     bkt = "__ibkt__"
     d = df.withColumn(bkt, floordiv(F.col(START_COL), bucket_width))
-
-    # Phase 2 summary first (cheap pruned scan + map-side-combined agg):
-    # patch = max(End) over all earlier buckets of the same key-group.
-    ws = Window.partitionBy(*keys).orderBy(F.col(bkt).asc())
-    patch = (
-        d.groupBy(*keys, bkt)
-        .agg(F.max(END_COL).alias("__bmax__"))
-        .select(
-            *keys,
-            bkt,
-            F.max("__bmax__")
-            .over(ws.rowsBetween(Window.unboundedPreceding, -1))
-            .alias("__patch__"),
-        )
+    prev = bucketed_scan(d, keys, bkt, [Scan("__pm__", "max", END_COL, order, inclusive=False)])
+    flagged = prev.withColumn("__inew__", _is_new(F.col("__pm__"), slack))
+    out = bucketed_scan(flagged, keys, bkt, [Scan("__isum__", "sum", "__inew__", order)])
+    return out.withColumn(island_col, (F.col("__isum__") - 1).cast("long")).drop(
+        bkt, "__pm__", "__inew__", "__isum__"
     )
-
-    # Phase 1: bucket-local exclusive running max, patched to the true
-    # preceding max; is_new becomes row-local.
-    wl = Window.partitionBy(*keys, bkt).orderBy(*order)
-    local = d.withColumn(
-        "__lpm__", F.max(END_COL).over(wl.rowsBetween(Window.unboundedPreceding, -1))
-    ).join(F.broadcast(patch), on=[*keys, bkt])
-    # greatest() skips nulls: first bucket has null patch, bucket-first rows
-    # have null local max; both-null => very first row of the key-group.
-    prev_max = F.greatest(F.col("__lpm__"), F.col("__patch__"))
-    flagged = local.withColumn("__inew__", _is_new(prev_max, slack))
-
-    # Phase 3: global island id = bucket-local cumsum of is_new + the count of
-    # islands started in earlier buckets (prefix over the summary relation).
-    flagged = flagged.withColumn(
-        "__lcum__",
-        F.sum("__inew__").over(wl.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-    )
-    offsets = (
-        flagged.groupBy(*keys, bkt)
-        .agg(F.sum("__inew__").alias("__bn__"))
-        .select(
-            *keys,
-            bkt,
-            F.coalesce(
-                F.sum("__bn__").over(ws.rowsBetween(Window.unboundedPreceding, -1)),
-                F.lit(0),
-            ).alias("__ioff__"),
-        )
-    )
-    out = flagged.join(F.broadcast(offsets), on=[*keys, bkt]).withColumn(
-        island_col, (F.col("__ioff__") + F.col("__lcum__") - 1).cast("long")
-    )
-    return out.drop(bkt, "__lpm__", "__patch__", "__inew__", "__lcum__", "__ioff__")
 
 
 def island_agg(

@@ -1,48 +1,53 @@
-"""Scalable ordered prefix sweep — two-phase cumulative aggregation.
+"""Two-phase bucketed scan — the engine's one ordered-sweep primitive.
 
 A plain ``Window.partitionBy(Chromosome).orderBy(pos)`` puts a whole
 chromosome in ONE task: fine at test scale, serial at 100 TB (a genome has
-~25 chromosomes, so at most ~25-way parallelism no matter the cluster). Sums
-are associative, so the sweep splits into two phases:
+~25 chromosomes, so at most ~25-way parallelism no matter the cluster).
+Running sums, counts, minima and maxima are associative, so
+:func:`bucketed_scan` splits every such sweep in two phases:
 
-1. bucket the position axis (``floor(pos / bucket_width)``) and run the
-   window per (keys, bucket) — parallelism = #buckets, data never leaves the
-   partition a hash shuffle gave it;
-2. aggregate one summary row per bucket (totals + first position), prefix-sum
-   THOSE with a window over the tiny summary relation, and join the bucket
-   offsets back (broadcastable — #buckets rows, not #points).
+1. the caller tags each row with a bucket that prefixes the scan order
+   (``floor(pos / width)``, or a hash's high bits) and the running aggregate
+   runs per (keys, bucket) — parallelism = #buckets;
+2. one summary row per bucket holds every scan's bucket total; an exclusive
+   prefix window over that tiny relation gives each bucket the total of the
+   buckets before it (ascending or descending), which is broadcast back and
+   combined with the bucket-local value (``+`` for sums and counts,
+   ``least``/``greatest`` for min/max, ``coalesce`` for the next position).
 
-``lead(pos)`` across bucket boundaries is recovered the same way: a local
-lead, patched on each bucket's last row with the next bucket's first
-position. Empty buckets are skipped naturally (bucket ids come from the data).
+Rows tied on the leading order column share a bucket, so the local window
+settles every tie rule. Empty buckets are skipped naturally (bucket ids come
+from the data).
 
-Consumers: coverage, coverage_ratio, split, count_overlaps_matrix — every
-event-point operator in the engine.
+Clients: ``prefix_sweep`` (coverage, coverage_ratio, split,
+count_overlaps_matrix, forbes/jaccard), ``asof_extreme`` (nearest_ranges'
+as-of legs, fdr), the bucketed island scan (plans/islands.py), the k-nearest
+and fdr ranks, ``nearest_distance`` and the training-mix pack/shuffle
+(ml/sampling.py). Two sites stay hand-written, each for the reason in its
+docstring: ``sort_ranges(rank_col=)`` and the quota pair's
+``_grouped_prefix_keep``.
 
-``prefix_sweep`` always persists the pre-aggregated delta relation
-(MEMORY_AND_DISK) for the duration of the plan. The delta subtree feeds TWO
-branches (bucket-local windows + bucket summary) that prune different
-columns, so Catalyst/AQE never shares their exchanges (verified at runtime:
-0 ReusedExchange); without the persist the subtree, which contains a full
-groupBy shuffle in every consumer, is evaluated twice. Persisting the
-post-aggregation rows trades one executor-local block write/read for that
-second shuffle — cheaper at every scale, and ``persist`` (unlike
-``localCheckpoint``) keeps lineage, so executor loss recomputes instead of
-failing. Interleaved A/B at sf0.1 (all four consumers, OPTIMIZATION_r15.md
-§2): coverage 2.23→1.80s, coverage_ratio 2.24→1.80s, split 2.27→1.85s,
-count_matrix 7.29→4.35s. The persist is TRACKED (plans/qcache.py):
-CacheManager holds persisted plans strongly, so the caller releases it via
-``free_tracked()`` once the result is consumed.
+The scan's input feeds two branches (bucket-local windows and the summary)
+that prune different columns, so Catalyst/AQE never shares their exchanges
+and the input subtree runs twice. Who persists, and why:
 
-``asof_extreme``/``bucketed_row_number`` keep the recompute shape: their
-points relations are unions of already-persisted inputs (nearest_ranges) or
-are materialized by the caller (fdr), where the duplicate evaluation is
-cheap. ``nearest_distance`` runs its own sweep of the same two-phase shape
-(operators/nearest.py): it needs three running extremes under two tie rules
-in one pass, which no single ``asof_extreme`` call gives.
+* ``prefix_sweep`` persists its pre-aggregated delta relation (tracked,
+  plans/qcache.py): in every consumer that subtree holds a full groupBy
+  shuffle, and one executor-local block write/read is cheaper than running
+  it twice (interleaved A/B at sf0.1, OPTIMIZATION_r15.md §2: coverage
+  2.23→1.80s, split 2.27→1.85s, count_matrix 7.29→4.35s). ``persist`` keeps
+  lineage, so executor loss recomputes instead of failing; the caller frees
+  it via ``free_tracked()`` once the result is consumed.
+* fdr localCheckpoints its ranked rows before its ``asof_extreme`` pass,
+  and nearest_ranges persists the stable-id relations its scans read.
+* The island scan, ``nearest_distance`` and pack/shuffle recompute: their
+  inputs are scans or cheap projections (a tracked persist of a 6M-row
+  derived island input lost 4/4 interleaved rounds, OPTIMIZATION_r16.md §8).
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -50,7 +55,72 @@ from pyspark.sql import functions as F
 from pyranges_1_x_spark.plans.interval_join import floordiv
 from pyranges_1_x_spark.plans.qcache import persist_tracked
 
-__all__ = ["prefix_sweep", "asof_extreme", "bucketed_row_number"]
+__all__ = ["Scan", "bucketed_scan", "prefix_sweep", "asof_extreme"]
+
+_AGG = {"sum": F.sum, "min": F.min, "max": F.max}
+
+
+class Scan(NamedTuple):
+    """One running aggregate of :func:`bucketed_scan`, written to ``out``.
+
+    ``kind``: ``sum``/``min``/``max`` of ``value``; ``row_number`` (a long,
+    ``value`` unused); ``next`` — ``value`` on the following row, where
+    ``value`` must be the leading ``order`` column, ascending. ``order`` is
+    the full in-bucket order; ``desc`` says the buckets run descending (the
+    order's leading column then descends too). ``inclusive=False`` ends a
+    sum/min/max frame at the row before the current one.
+    """
+
+    out: str
+    kind: str
+    value: str | Column | None
+    order: list[Column]
+    desc: bool = False
+    inclusive: bool = True
+
+
+def bucketed_scan(d: DataFrame, keys: list[str], bkt: str, scans: list[Scan]) -> DataFrame:
+    """``d``'s columns + each scan's running aggregate per ``keys``, in bucket
+    order then in-bucket order (module docstring). ``d`` must carry the bucket
+    column ``bkt``, whose order prefixes every scan's order."""
+    in_bucket = Window.partitionBy(*keys, bkt)
+    buckets = Window.partitionBy(*keys)
+    local, totals, patches, combined = [], [], [], []
+    for i, s in enumerate(scans):
+        if s.kind not in (*_AGG, "row_number", "next") or (s.kind == "next" and s.desc):
+            raise ValueError(f"unsupported scan: {s.kind!r} desc={s.desc}")
+        loc, tot, pat = f"__bsl{i}__", f"__bst{i}__", f"__bsp{i}__"
+        wl = in_bucket.orderBy(*s.order)
+        ws = buckets.orderBy(F.col(bkt).desc() if s.desc else F.col(bkt).asc())
+        prior = ws.rowsBetween(Window.unboundedPreceding, -1)
+        if s.kind == "row_number":
+            local.append(F.row_number().over(wl).cast("long").alias(loc))
+            totals.append(F.count(F.lit(1)).alias(tot))
+        elif s.kind == "next":
+            local.append(F.lead(s.value).over(wl).alias(loc))
+            totals.append(F.min(s.value).alias(tot))
+        else:
+            frame = wl.rowsBetween(
+                Window.unboundedPreceding, Window.currentRow if s.inclusive else -1
+            )
+            local.append(_AGG[s.kind](s.value).over(frame).alias(loc))
+            totals.append(_AGG[s.kind](s.value).alias(tot))
+        if s.kind in ("sum", "row_number"):
+            patches.append(F.coalesce(F.sum(tot).over(prior), F.lit(0)).alias(pat))
+            combined.append((F.col(pat) + F.col(loc)).alias(s.out))
+        elif s.kind == "next":
+            patches.append(F.lead(tot).over(ws).alias(pat))
+            combined.append(F.coalesce(F.col(loc), F.col(pat)).alias(s.out))
+        else:
+            # least/greatest skip nulls: a bucket with no local value (or no
+            # earlier bucket) degrades to the other operand; both null => null.
+            patches.append(_AGG[s.kind](tot).over(prior).alias(pat))
+            pick = F.least if s.kind == "min" else F.greatest
+            combined.append(pick(F.col(loc), F.col(pat)).alias(s.out))
+    summary = d.groupBy(*keys, bkt).agg(*totals).select(*keys, bkt, *patches)
+    out = d.select("*", *local).join(F.broadcast(summary), on=[*keys, bkt])
+    outs = {s.out for s in scans}
+    return out.select(*[c for c in d.columns if c not in outs], *combined)
 
 
 def prefix_sweep(
@@ -72,43 +142,10 @@ def prefix_sweep(
     the module docstring.
     """
     d = persist_tracked(deltas).withColumn("__bkt__", floordiv(F.col(pos_col), bucket_width))
-
-    wl = Window.partitionBy(*keys, "__bkt__").orderBy(F.col(pos_col).asc())
-    wlc = wl.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    local = d.select(
-        *keys,
-        pos_col,
-        "__bkt__",
-        *[F.sum(c).over(wlc).alias(f"__loc{i}__") for i, c in enumerate(delta_cols)],
-        F.lead(pos_col).over(wl).alias("__llead__"),
-    )
-
-    summary = d.groupBy(*keys, "__bkt__").agg(
-        *[F.sum(c).alias(f"__tot{i}__") for i, c in enumerate(delta_cols)],
-        F.min(pos_col).alias("__first__"),
-    )
-    ws = Window.partitionBy(*keys).orderBy(F.col("__bkt__").asc())
-    wsp = ws.rowsBetween(Window.unboundedPreceding, -1)
-    summary = summary.select(
-        *keys,
-        "__bkt__",
-        *[
-            F.coalesce(F.sum(f"__tot{i}__").over(wsp), F.lit(0)).alias(f"__off{i}__")
-            for i in range(len(delta_cols))
-        ],
-        F.lead("__first__").over(ws).alias("__nfirst__"),
-    )
-
-    out = local.join(F.broadcast(summary), on=[*keys, "__bkt__"])
-    return out.select(
-        *keys,
-        pos_col,
-        *[
-            (F.col(f"__off{i}__") + F.col(f"__loc{i}__")).alias(cum_cols[i])
-            for i in range(len(delta_cols))
-        ],
-        F.coalesce(F.col("__llead__"), F.col("__nfirst__")).alias(next_col),
-    )
+    order = [F.col(pos_col).asc()]
+    scans = [Scan(cum, "sum", c, order) for c, cum in zip(delta_cols, cum_cols)]
+    out = bucketed_scan(d, keys, "__bkt__", [*scans, Scan(next_col, "next", pos_col, order)])
+    return out.select(*keys, pos_col, *cum_cols, next_col)
 
 
 def asof_extreme(
@@ -123,97 +160,23 @@ def asof_extreme(
     bucket_width: int,
     out_col: str,
 ) -> DataFrame:
-    """Bucketed as-of sweep: running min/max of data-row values, two-phase.
+    """Bucketed as-of sweep: running min/max of data-row values.
 
     For every row of ``points``: the ``agg`` ('min'/'max') of ``val_col`` over
     data rows (``data_flag`` true) whose position is on this row's ``side`` —
     ``'ge'``: at-or-after it; ``'le'``: at-or-before it. Data rows count at
     position ties (touching is eligible — reference range_frame.py:451-537
-    distance convention).
-
-    Same scale posture as ``prefix_sweep``: min/max are associative, so the
-    sweep runs per (keys, bucket) — parallelism = #buckets, not #chromosomes —
-    and each bucket is patched with the extreme of the OTHER buckets on its
-    open side, prefix-scanned over the tiny one-row-per-bucket summary
-    relation. Position ties always share a bucket (same floor), so the
-    data-first tie rule stays a purely bucket-local concern.
+    distance convention): they sort first among equal positions, which share
+    a bucket, so the tie rule stays bucket-local.
     """
     if side not in ("ge", "le"):
         raise ValueError(f"side must be 'ge' or 'le', got {side!r}")
     if agg not in ("min", "max"):
         raise ValueError(f"agg must be 'min' or 'max', got {agg!r}")
-    dval = F.when(data_flag, F.col(val_col))
     d = points.withColumn("__bkt__", floordiv(F.col(pos_col), bucket_width)).withColumn(
         "__dtf__", F.when(data_flag, 0).otherwise(1)
     )
-    agg_fn = F.min if agg == "min" else F.max
-    combine = F.least if agg == "min" else F.greatest
-    if side == "ge":
-        order = [F.col(pos_col).desc(), F.col("__dtf__").asc()]
-        summary_order = F.col("__bkt__").desc()  # patch = extreme of LATER buckets
-    else:
-        order = [F.col(pos_col).asc(), F.col("__dtf__").asc()]
-        summary_order = F.col("__bkt__").asc()  # patch = extreme of EARLIER buckets
-
-    wl = (
-        Window.partitionBy(*keys, "__bkt__")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = d.withColumn("__loc__", agg_fn(dval).over(wl))
-
-    summary = d.groupBy(*keys, "__bkt__").agg(agg_fn(dval).alias("__tot__"))
-    ws = (
-        Window.partitionBy(*keys)
-        .orderBy(summary_order)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    summary = summary.select(
-        *keys, "__bkt__", agg_fn("__tot__").over(ws).alias("__patch__")
-    )
-
-    out = local.join(F.broadcast(summary), on=[*keys, "__bkt__"])
-    # least/greatest skip nulls, so a bucket with no local data rows (or no
-    # patch on its open side) degrades to the other operand; both-null => null.
-    return out.withColumn(out_col, combine(F.col("__loc__"), F.col("__patch__"))).drop(
-        "__bkt__", "__dtf__", "__loc__", "__patch__"
-    )
-
-
-def bucketed_row_number(
-    df: DataFrame,
-    keys: list[str],
-    pos_col: str,
-    order: list[Column],
-    *,
-    bucket_width: int,
-    descending: bool = False,
-    out_col: str = "__rr__",
-) -> DataFrame:
-    """Global per-keys row_number whose ordering starts with ``pos_col``
-    (ascending, or descending with ``descending=True``), computed without a
-    per-keys serial window: rank = bucket-local row_number + the count of rows
-    in all preceding buckets (prefix-summed over the one-row-per-bucket
-    summary). ``order`` must be the FULL ordering including the position
-    column first — ties on position share a bucket, so the total order is
-    preserved exactly.
-    """
-    d = df.withColumn("__bkt__", floordiv(F.col(pos_col), bucket_width))
-    wl = Window.partitionBy(*keys, "__bkt__").orderBy(*order)
-    local = d.withColumn("__lrn__", F.row_number().over(wl).cast("long"))
-
-    summary = d.groupBy(*keys, "__bkt__").agg(F.count(F.lit(1)).alias("__cnt__"))
-    ws = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col("__bkt__").desc() if descending else F.col("__bkt__").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    summary = summary.select(
-        *keys,
-        "__bkt__",
-        F.coalesce(F.sum("__cnt__").over(ws), F.lit(0)).alias("__off__"),
-    )
-    out = local.join(F.broadcast(summary), on=[*keys, "__bkt__"])
-    return out.withColumn(out_col, F.col("__off__") + F.col("__lrn__")).drop(
-        "__bkt__", "__lrn__", "__off__"
-    )
+    ge = side == "ge"
+    pos = F.col(pos_col).desc() if ge else F.col(pos_col).asc()
+    scan = Scan(out_col, agg, F.when(data_flag, F.col(val_col)), [pos, F.col("__dtf__").asc()], ge)
+    return bucketed_scan(d, keys, "__bkt__", [scan]).drop("__bkt__", "__dtf__")

@@ -134,6 +134,21 @@ def test_nearest_distance_bruteforce(spark):
         spark.createDataFrame([("chr1", None, 100)], "Chromosome string, Start long, End long")
     )
     assert a.nearest_distance(nb).df.count() == 0
+    assert a.nearest_ranges(nb).df.count() == 0
+    # A self row with Start > End has no neighbor in either operator, even
+    # where a backward candidate ends before its Start.
+    bad = GenomicRanges(spark.createDataFrame(
+        pd.concat([pa.head(3), pd.DataFrame([("chr1", 50, 10, 99)], columns=pa.columns)])
+    ))
+    other = GenomicRanges(
+        spark.createDataFrame([("chr1", 30, 45)], "Chromosome string, Start long, End long")
+    )
+    want = brute_nearest_distance(pa.head(3), pd.DataFrame(
+        [("chr1", 30, 45)], columns=["Chromosome", "Start", "End"]
+    ))
+    for got in (bad.nearest_distance(other).df, bad.nearest_ranges(other).df):
+        got = got.toPandas()
+        assert dict(zip(got.idx, got.Distance)) == want
 
 
 def brute_nearest_nonoverlapping(a, b, direction):

@@ -9,7 +9,9 @@ import random
 import pandas as pd
 from pyspark.sql import functions as F
 
-from pyranges_1_x_spark.plans.sweep import asof_extreme, bucketed_row_number
+from pyranges_1_x_spark.plans.interval_join import floordiv
+from pyranges_1_x_spark.plans.qcache import free_tracked
+from pyranges_1_x_spark.plans.sweep import Scan, asof_extreme, bucketed_scan, prefix_sweep
 
 
 def _points(seed, n=120, span=200):
@@ -59,8 +61,9 @@ def test_bucketed_row_number_matches_global_sort(spark):
             F.col("pos").desc() if descending else F.col("pos").asc(),
             F.col("rid").asc(),
         ]
-        got = bucketed_row_number(
-            df, ["k"], "pos", order, bucket_width=5, descending=descending, out_col="rr"
+        got = bucketed_scan(
+            df.withColumn("bkt", floordiv(F.col("pos"), 5)), ["k"], "bkt",
+            [Scan("rr", "row_number", None, order, desc=descending)],
         ).collect()
         gotmap = {r["rid"]: r["rr"] for r in got}
         for k, grp in pdf.groupby("k"):
@@ -87,3 +90,28 @@ def test_asof_extreme_ties_include_data_rows(spark):
         side="le", agg="max", bucket_width=4, out_col="cand",
     )
     assert {r["rid"]: r["cand"] for r in le.collect()}[1] == 10
+
+
+def test_prefix_sweep_vs_brute(spark):
+    # Two keys, negative positions, one single-point group: running sums of
+    # both delta columns and the next position (NULL on each group's last).
+    rng = random.Random(5)
+    rows = [
+        (k1, k2, pos, rng.randint(-3, 3), rng.randint(0, 5))
+        for k1 in ("a", "b")
+        for k2 in ("x", "y")
+        for pos in sorted(rng.sample(range(-20, 25), 12))
+    ] + [("c", "z", -4, 2, 1)]
+    pdf = pd.DataFrame(rows, columns=["k1", "k2", "pos", "d1", "d2"])
+    got = prefix_sweep(
+        spark.createDataFrame(pdf), ["k1", "k2"], "pos", ["d1", "d2"], ["c1", "c2"],
+        bucket_width=3, next_col="nxt",
+    ).collect()
+    free_tracked()
+    want = {}
+    for (k1, k2), grp in pdf.groupby(["k1", "k2"]):
+        grp = grp.sort_values("pos")
+        nxt = grp.pos.tolist()[1:] + [None]
+        for (pos, c1, c2), n in zip(zip(grp.pos, grp.d1.cumsum(), grp.d2.cumsum()), nxt):
+            want[(k1, k2, pos)] = (c1, c2, n)
+    assert {(r.k1, r.k2, r.pos): (r.c1, r.c2, r.nxt) for r in got} == want
