@@ -25,11 +25,12 @@ def fdr(df: DataFrame, p_col: str = "PValue", out_col: str = "FDR") -> DataFrame
     scalar, the global p-rank is a ``row_number`` ``bucketed_scan`` over the
     scaled-p bucket axis, and the BH suffix min is ``asof_extreme`` on the
     rank axis (bucket-local running min patched with later buckets' minima
-    via the one-row-per-bucket summary)."""
+    via the one-row-per-bucket summary). A NULL p-value is not a test: it
+    counts in neither n nor the ranks, and its row is dropped."""
     from pyranges_1_x_spark.plans.interval_join import floordiv
     from pyranges_1_x_spark.plans.sweep import Scan, asof_extreme, bucketed_scan
 
-    n_row = df.agg(F.count(F.lit(1)).cast("double").alias("__n__"))
+    n_row = df.agg(F.count(p_col).cast("double").alias("__n__"))
     d = df.crossJoin(F.broadcast(n_row))
     # p in [0, 1] -> integer bucket axis; equal p always shares a bucket.
     d = d.withColumn("__pp__", F.floor(F.col(p_col) * F.lit(1e9)).cast("long"))
@@ -44,14 +45,14 @@ def fdr(df: DataFrame, p_col: str = "PValue", out_col: str = "FDR") -> DataFrame
     # (bucket-local window + bucket summary — sweep.py's documented trade),
     # and here that input is itself the whole rank pipeline (exchange + two
     # windows + broadcast join), which the duplicate evaluation re-ran end
-    # to end (plans/r15/fdr_before.txt ops 50-93). The branches prune
-    # different columns, so Catalyst/AQE never reuses the exchange (verified
-    # at runtime: 0 ReusedExchange). A LAZY localCheckpoint materializes the
-    # ranked rows once — narrow rows (id cols + p + n + rank + raw), so the
-    # block write is far cheaper than a second full exchange+window pass at
-    # any scale. Interleaved A/B at sf0.1 in OPTIMIZATION_r15.md. Tracked
-    # (plans/qcache.py, r16): checkpoint blocks outlive the plan — the
-    # caller releases via free_tracked() once the result is consumed.
+    # to end (plans/r15/fdr_before.txt ops 50-93); AQE reused no exchange
+    # there (verified at runtime: 0 ReusedExchange). A LAZY localCheckpoint
+    # materializes the ranked rows once — narrow rows (id cols + p + n +
+    # rank + raw), so the block write is far cheaper than a second full
+    # exchange+window pass at any scale. Interleaved A/B at sf0.1 in
+    # OPTIMIZATION_r15.md. Tracked (plans/qcache.py, r16): checkpoint blocks
+    # outlive the plan — the caller releases via free_tracked() once the
+    # result is consumed.
     d = checkpoint_tracked(d, eager=False)
     d = asof_extreme(
         d,

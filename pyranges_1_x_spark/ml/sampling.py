@@ -123,8 +123,10 @@ def pack_training_examples(
     ``deterministic_shuffle`` and plans/sweep.py): the hash's high
     ``bucket_bits`` form uniform buckets that PREFIX the total order; the
     running token sum is a per-bucket window plus one broadcast prefix
-    offset per bucket (2^bits summary rows). Token counting is a row-local
-    JVM expression; integer arithmetic end-to-end (oracle-exact).
+    offset per bucket (2^bits summary rows) — a ``bucketed_scan`` sum. A row
+    whose hash is NULL (a NULL id under ``md5_hash64``) has no place in the
+    order and is dropped. Token counting is a row-local JVM expression;
+    integer arithmetic end-to-end (oracle-exact).
     """
     from pyranges_1_x_spark.plans.interval_join import floordiv
 
@@ -144,15 +146,8 @@ def pack_training_examples(
             F.size(nonempty_tokens(F.col(text_col))), F.lit(0)
         ).cast("long")
     shift = _bucket_shift(hash_fn, bucket_bits)
-    # NULL ids are excluded up front (r14 review find): a NULL key hashes to
-    # a NULL bucket, whose rows can never equi-join their offset back —
-    # but, unguarded, the NULL bucket's token total still entered the
-    # prefix-offset window (NULLS FIRST) and shifted EVERY real doc's
-    # start_offset. A row without identity has no stable place in a
-    # deterministic order; dropping it corrupts nothing else.
     d = (
-        df.filter(F.col(id_col).isNotNull())
-        .select(F.col(id_col), nt.alias("__nt__"))
+        df.select(F.col(id_col), nt.alias("__nt__"))
         .withColumn("__h__", hash_fn(F.col(id_col), seed))
         .withColumn("__bkt__", F.shiftright("__h__", shift))
     )
@@ -178,26 +173,15 @@ def _grouped_prefix_keep(
     """Shared two-phase engine of the quota pair: per ``group_col``, the
     running total of ``measure`` (a Column; ``lit(1)`` makes it a rank) in
     ascending ``(hash(key_col, seed), key_col)`` order, keeping only rows
-    whose INCLUSIVE running total is <= ``limit``. No per-group global
-    window: the hash's high ``bucket_bits`` split each group into 2^bits
-    uniform sub-buckets that prefix the group's order; the running total is
-    a per-(group, bucket) window plus a broadcast per-(group, bucket)
-    prefix offset (summary <= #groups * 2^bits rows, its window per-group
-    over <= 2^bits rows). Rows whose BUCKET-LOCAL total already exceeds
-    ``limit`` are pruned before the offset join — the global total only
-    grows — so the join input is bounded however large the corpus. The
-    offset join is null-safe: a NULL group (missing domain/source) is a
-    legitimate quota group of its own; the window already treats it as one
-    partition, and a plain equi-join would silently DROP those rows.
-    ``key_col`` values are assumed non-null (a NULL key hashes to NULL and
-    would sort engine-dependently). Not a ``plans/sweep.py:bucketed_scan``:
-    it prunes rows before the join and joins back null-safe.
+    whose INCLUSIVE running total is <= ``limit``. One
+    ``plans/sweep.py:bucketed_scan`` sum per group over the hash's high
+    ``bucket_bits`` (summary <= #groups * 2^bits rows). A NULL group
+    (missing domain/source) is a quota group of its own; a row whose hash
+    is NULL (a NULL key under ``md5_hash64``) leaves the order.
 
     Returns the input columns + ``__m__`` (the row's measure) + ``__run__``
     (the group's inclusive running total at this row).
     """
-    from pyspark.sql import Window
-
     if limit < 0:
         raise ValueError("the quota limit must be non-negative")
     if not 1 <= bucket_bits <= 40:
@@ -208,35 +192,9 @@ def _grouped_prefix_keep(
         .withColumn("__h__", hash_fn(F.col(key_col), seed))
         .withColumn("__bkt__", F.shiftright("__h__", shift))
     )
-    wl = (
-        Window.partitionBy(group_col, "__bkt__")
-        .orderBy(F.col("__h__").asc(), F.col(key_col).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = d.withColumn("__lrun__", F.sum("__m__").over(wl)).filter(
-        F.col("__lrun__") <= limit
-    )
-    summary = d.groupBy(group_col, "__bkt__").agg(F.sum("__m__").alias("__tot__"))
-    ws = (
-        Window.partitionBy(group_col)
-        .orderBy(F.col("__bkt__").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    summary = summary.select(
-        F.col(group_col).alias("__g2__"),
-        F.col("__bkt__").alias("__b2__"),
-        F.coalesce(F.sum("__tot__").over(ws), F.lit(0)).alias("__off__"),
-    )
-    return (
-        local.join(
-            F.broadcast(summary),
-            on=F.col(group_col).eqNullSafe(F.col("__g2__"))
-            & (F.col("__bkt__") == F.col("__b2__")),
-        )
-        .withColumn("__run__", F.col("__off__") + F.col("__lrun__"))
-        .filter(F.col("__run__") <= limit)
-        .select(*df.columns, "__m__", "__run__")
-    )
+    order = [F.col("__h__").asc(), F.col(key_col).asc()]
+    out = bucketed_scan(d, [group_col], "__bkt__", [Scan("__run__", "sum", "__m__", order)])
+    return out.filter(F.col("__run__") <= limit).select(*df.columns, "__m__", "__run__")
 
 
 def quota_sample(
@@ -261,7 +219,7 @@ def quota_sample(
 
     Physical plan: ``_grouped_prefix_keep`` with measure ``lit(1)`` (a
     running count IS a rank under a total order) — see the helper for the
-    two-phase bucketed shape, the pre-join prune, and NULL-group semantics.
+    two-phase bucketed shape and the NULL rules.
     """
     kept = _grouped_prefix_keep(
         df, group_col, key_col, seed, hash_fn, bucket_bits, F.lit(1).cast("long"), cap
@@ -299,8 +257,7 @@ def token_quota_sample(
 
     Physical plan: ``_grouped_prefix_keep`` with the token count as the
     measure (the pack_training_examples decomposition, per group) — see
-    the helper for the two-phase bucketed shape, the pre-join prune, and
-    NULL-group semantics.
+    the helper for the two-phase bucketed shape and the NULL rules.
     """
     if tokens_col is not None:
         nt = F.col(tokens_col).cast("long")
@@ -344,18 +301,15 @@ def deterministic_shuffle(
     Scale shape (two-phase, no global window): the hash's high
     ``bucket_bits`` form 2^bits uniform buckets that are a PREFIX of the
     total order, so rank = per-bucket ``row_number`` + a broadcast prefix
-    offset from one summary row per bucket — the same plan that de-serialized
-    ``sort_ranges(rank_col=...)`` (VERDICT r4 #3), here with provably
-    balanced buckets because the bucket key is a hash prefix.
+    offset from one summary row per bucket — the ``bucketed_scan`` row_number
+    that ``sort_ranges(rank_col=...)`` also uses, here with provably balanced
+    buckets because the bucket key is a hash prefix. A row whose hash is NULL
+    is dropped (see ``pack_training_examples``).
     """
     if not 1 <= bucket_bits <= 40:
         raise ValueError("bucket_bits must be in [1, 40]")
     shift = _bucket_shift(hash_fn, bucket_bits)
-    # NULL keys are excluded up front — same offset-corruption mechanism as
-    # pack_training_examples (r14 review find)
-    d = df.filter(F.col(key_col).isNotNull()).withColumn(
-        "__h__", hash_fn(F.col(key_col), seed)
-    ).withColumn(
+    d = df.withColumn("__h__", hash_fn(F.col(key_col), seed)).withColumn(
         "__bkt__", F.shiftright("__h__", shift)
     )
     order = [F.col("__h__").asc(), F.col(key_col).asc()]

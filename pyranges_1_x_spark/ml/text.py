@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyranges_1_x_spark.plans.qcache import free_checkpoint
+
 #: Tiny english stopword list for quality heuristics (deterministic, no deps).
 STOPWORDS = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]
 
@@ -144,24 +146,6 @@ def _merge_adjacent(symbols: Column, lhs: str, rhs: str) -> Column:
             F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(fused)),
         ).otherwise(F.concat(acc, F.array(s))),
     )
-
-
-def _free_local_checkpoint(df: DataFrame) -> None:
-    """Eagerly release a ``localCheckpoint``'ed DataFrame's persisted blocks.
-
-    ``DataFrame.unpersist()`` is a NO-OP here (r14 review find, verified on
-    PySpark 4.1.2): it clears cacheManager entries, but a local checkpoint's
-    blocks are persisted directly on the internal RDD wrapped by the
-    checkpoint's ``LogicalRDD`` plan node — not registered with the cache
-    manager — and even dropping the Python reference leaves cleanup to the
-    async ContextCleaner. Reaching the RDD through the analyzed plan and
-    unpersisting IT frees the blocks immediately (persistent-RDD count
-    drops, measured). Plan-internals access is wrapped so any API drift
-    degrades to the old GC-eventually behavior, never an error."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:  # noqa: BLE001 — best-effort; ContextCleaner fallback
-        pass
 
 
 def bpe_train(
@@ -299,14 +283,14 @@ def bpe_train(
             # blocks are dead weight — free them NOW instead of leaving
             # n_merges/checkpoint_every relations to ContextCleaner
             # (ADVICE r13; the naive DataFrame.unpersist() is a no-op on
-            # local checkpoints — see _free_local_checkpoint).
-            _free_local_checkpoint(anchor)
+            # local checkpoints — see plans/qcache.py:free_checkpoint).
+            free_checkpoint(anchor)
             words = anchor = new_anchor
             rewrites_since_ckpt = 0
     # r16: only the merge LIST escapes this function — the final anchor's
     # checkpoint blocks are dead weight the moment the loop exits. Free them
     # here instead of leaking them for the session (VERDICT r15 #1 class).
-    _free_local_checkpoint(anchor)
+    free_checkpoint(anchor)
     return merges
 
 

@@ -32,13 +32,14 @@ def to_coverage(
 
     ``value_col`` weights each interval (reference value_col); ``rpm``
     normalizes by 1e6/row-count (reference methods/to_rle.py:59-61);
-    ``drop_zero`` removes zero-depth runs between islands.
+    ``drop_zero`` removes zero-depth runs between islands. Rows with a NULL
+    Start or End cover nothing and are dropped (and not counted by ``rpm``).
     """
     from pyranges_1_x_spark.plans.sweep import prefix_sweep
 
     keys = self.group_keys(use_strand)
     val = F.col(value_col).cast("double") if value_col else F.lit(1).cast("long")
-    d = self.df
+    d = self.df.filter(F.col(nm.START_COL).isNotNull() & F.col(nm.END_COL).isNotNull())
     starts = d.select(*keys, F.col(nm.START_COL).alias("__pos__"), val.alias("__delta__"))
     ends = d.select(*keys, F.col(nm.END_COL).alias("__pos__"), (-val).alias("__delta__"))
     deltas = starts.unionByName(ends).groupBy(*keys, "__pos__").agg(

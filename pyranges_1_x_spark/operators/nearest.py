@@ -6,8 +6,8 @@ overlapping pairs have Distance 0; non-overlapping (incl. touching) have
 ``gap + 1`` (touching => 1). Rows with no eligible neighbor are dropped.
 
 Both operators first drop invalid rows from both inputs (``_valid_rows``):
-a NULL Start, a NULL End or Start > End has no neighbor and is nobody's
-neighbor.
+a NULL key, a NULL Start, a NULL End or Start > End has no neighbor and is
+nobody's neighbor.
 
 ``nearest_distance`` (self rows + Distance, no other columns) is ONE
 ``plans/sweep.py:bucketed_scan`` call. Each self row becomes a point at its
@@ -87,12 +87,16 @@ from pyranges_1_x_spark.plans.sweep import Scan, asof_extreme, bucketed_scan
 _SID = STABLE_ID_COLS
 
 
-def _valid_rows(df: DataFrame) -> DataFrame:
-    """The rows both nearest operators see: a row with a NULL Start, a NULL
-    End or Start > End has no neighbor and is nobody's neighbor (the
-    comparison is NULL, so the filter drops NULL coordinates too). Empty
-    rows (Start == End) stay."""
-    return df.filter(F.col(nm.START_COL) <= F.col(nm.END_COL))
+def _valid_rows(df: DataFrame, keys: list[str]) -> DataFrame:
+    """The rows both nearest operators see: a row with a NULL key, a NULL
+    Start, a NULL End or Start > End has no neighbor and is nobody's neighbor
+    (the comparison is NULL, so the filter drops NULL coordinates too; keys
+    match by equality, as in the overlap join, though bucketed_scan would
+    group NULL keys). Empty rows (Start == End) stay."""
+    ok = F.col(nm.START_COL) <= F.col(nm.END_COL)
+    for k in keys:
+        ok &= F.col(k).isNotNull()
+    return df.filter(ok)
 
 
 def _resolve_legs(self: GenomicRanges, direction: str):
@@ -154,12 +158,12 @@ def nearest_distance(
 
     # Class 0: self row at its End; class 1: other row at its Start.
     pts = (
-        _valid_rows(self.df).select(
+        _valid_rows(self.df, keys).select(
             *keys, F.col(nm.END_COL).alias("__pos__"), F.lit(0).alias("__cls__"),
             F.struct(*self.df.columns).alias("__row__"),
         )
         .unionByName(
-            _valid_rows(odf).select(
+            _valid_rows(odf, keys).select(
                 *keys, F.col(nm.START_COL).alias("__pos__"), F.lit(1).alias("__cls__"),
                 F.col(nm.END_COL).alias("__re__"),
             ),
@@ -238,9 +242,9 @@ def nearest_ranges(
     # id shuffle + input scan run once. Tracked (plans/qcache.py):
     # CacheManager holds persisted plans strongly, so the caller releases
     # via free_tracked().
-    left = persist_tracked(with_stable_id(_valid_rows(self.df)))
+    left = persist_tracked(with_stable_id(_valid_rows(self.df, keys)))
     rsid = ["__rid1__", "__rid2__", "__rdr__"]
-    right = persist_tracked(with_stable_id(_valid_rows(odf)))
+    right = persist_tracked(with_stable_id(_valid_rows(odf, keys)))
     for a, b in zip(STABLE_ID_COLS, rsid):
         right = right.withColumnRenamed(a, b)
     rcoords = right.select(

@@ -96,15 +96,19 @@ def assign_islands(
     size estimate says the input fits comfortably in one task per key-group
     (see ``DEFAULT_SINGLE_WINDOW_BYTES``), the single-window plan runs
     instead. ``bucket_width=None``/``0`` forces the single-window plan.
+    Rows with a NULL Start have no place in the scan and are dropped under
+    both plans; a NULL key is a group of its own.
 
-    The bucketed plan's bucket-tagged input feeds TWO branches that never
-    canonicalize equal (the bucket summary and the bucket-local window), so
-    an upstream-derived input is evaluated twice. It is deliberately not
+    The bucketed plan's bucket-tagged input feeds TWO branches (the bucket
+    summary and the bucket-local window), so an upstream-derived input is
+    evaluated twice unless AQE reuses an exchange inside it (plans/sweep.py
+    module docstring). It is deliberately not
     persisted: at the firing shape (6M-row derived union input, bucketed
     plan forced, values identical) a tracked persist lost 4/4 interleaved
     rounds, min 6.90s without vs 8.92s with (OPTIMIZATION_r16.md §8) — the
     phase-2 summary re-scan is cheaper than writing+reading the cache.
     """
+    df = df.filter(F.col(START_COL).isNotNull())
     if bucket_width and _single_window_ok(df):
         bucket_width = None
     order = [F.col(START_COL).asc(), F.col(END_COL).asc()] + [

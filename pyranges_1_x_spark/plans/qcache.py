@@ -29,9 +29,9 @@ each timed run pays its own in-query materialization — the floor of those
 queries rises to the honest number.
 
 ``localCheckpoint`` blocks need the analyzed-plan RDD unpersist (a plain
-``DataFrame.unpersist()`` is a no-op on them — see ml/text.py
-``_free_local_checkpoint``, r14); :func:`checkpoint_tracked` records the
-checkpointed frame and :func:`free_tracked` applies that release path.
+``DataFrame.unpersist()`` is a no-op on them — see :func:`free_checkpoint`);
+:func:`checkpoint_tracked` records the checkpointed frame and
+:func:`free_tracked` applies that release path.
 
 The FASTA tile cache (functions/seqs.py) is deliberately cross-query with its
 own bounded registry and event counters (r11, judge-sanctioned) and does NOT
@@ -87,8 +87,8 @@ def checkpoint_tracked(
 def _free_ckpt(df: DataFrame) -> None:
     # A local checkpoint's blocks live on the internal RDD wrapped by the
     # checkpoint's LogicalRDD node, not in CacheManager, so DataFrame
-    # .unpersist() is a no-op on them; unpersist the RDD itself (ml/text.py
-    # r14 pattern, measured: persistent-RDD count drops immediately).
+    # .unpersist() is a no-op on them (verified on PySpark 4.1.2); unpersist
+    # the RDD itself (measured: persistent-RDD count drops immediately).
     df._jdf.queryExecution().analyzed().rdd().unpersist(False)  # noqa: SLF001
 
 

@@ -19,25 +19,33 @@ Rows tied on the leading order column share a bucket, so the local window
 settles every tie rule. Empty buckets are skipped naturally (bucket ids come
 from the data).
 
-Clients: ``prefix_sweep`` (coverage, coverage_ratio, split,
-count_overlaps_matrix, forbes/jaccard), ``asof_extreme`` (nearest_ranges'
-as-of legs, fdr), the bucketed island scan (plans/islands.py), the k-nearest
-and fdr ranks, ``nearest_distance`` and the training-mix pack/shuffle
-(ml/sampling.py). Two sites stay hand-written, each for the reason in its
-docstring: ``sort_ranges(rank_col=)`` and the quota pair's
-``_grouped_prefix_keep``.
+The NULL rule, in one place: a row whose bucket is NULL (a NULL position or
+hash) has no place in the order and is dropped before either phase reads the
+input; a NULL key is a group of its own, as in ``Window.partitionBy``, so the
+patch join matches keys null-safe.
 
-The scan's input feeds two branches (bucket-local windows and the summary)
-that prune different columns, so Catalyst/AQE never shares their exchanges
-and the input subtree runs twice. Who persists, and why:
+Clients, with no hand-written exception: ``prefix_sweep`` (coverage,
+coverage_ratio, split, count_overlaps_matrix, forbes/jaccard),
+``asof_extreme`` (nearest_ranges' as-of legs, fdr), the bucketed island scan
+(plans/islands.py), ``nearest_distance``, the k-nearest and fdr ranks,
+``sort_ranges(rank_col=)`` (keys=[], a composite (chrom key, Strand, Start
+bucket) struct bucket) and, in ml/sampling.py, pack/shuffle (keys=[], a
+hash-prefix bucket) and the quota pair (keys=[group]).
+
+The scan's input feeds two branches (bucket-local windows and the summary).
+Both read the same filtered subtree, so over a file scan AQE can reuse a
+shuffle inside it (ReusedExchange) instead of running it twice; over a
+persisted source AQE 4.1.2 plans each branch its own cache read and reuses
+nothing. Who persists, and why:
 
 * ``prefix_sweep`` persists its pre-aggregated delta relation (tracked,
   plans/qcache.py): in every consumer that subtree holds a full groupBy
-  shuffle, and one executor-local block write/read is cheaper than running
-  it twice (interleaved A/B at sf0.1, OPTIMIZATION_r15.md §2: coverage
-  2.23→1.80s, split 2.27→1.85s, count_matrix 7.29→4.35s). ``persist`` keeps
-  lineage, so executor loss recomputes instead of failing; the caller frees
-  it via ``free_tracked()`` once the result is consumed.
+  shuffle over the registry's persisted fixtures, which is the cached-source
+  case AQE does not reuse. Without the persist coverage, split and
+  count_matrix lost 7 of 9 interleaved bench.py pairs at sf0.1 (medians
+  4.63→5.06s, 3.66→4.14s, 4.87→5.80s). ``persist`` keeps lineage, so
+  executor loss recomputes instead of failing; the caller frees it via
+  ``free_tracked()`` once the result is consumed.
 * fdr localCheckpoints its ranked rows before its ``asof_extreme`` pass,
   and nearest_ranges persists the stable-id relations its scans read.
 * The island scan, ``nearest_distance`` and pack/shuffle recompute: their
@@ -82,7 +90,9 @@ class Scan(NamedTuple):
 def bucketed_scan(d: DataFrame, keys: list[str], bkt: str, scans: list[Scan]) -> DataFrame:
     """``d``'s columns + each scan's running aggregate per ``keys``, in bucket
     order then in-bucket order (module docstring). ``d`` must carry the bucket
-    column ``bkt``, whose order prefixes every scan's order."""
+    column ``bkt``, whose order prefixes every scan's order. Rows with a NULL
+    bucket are dropped; a NULL key is a group of its own."""
+    d = d.filter(F.col(bkt).isNotNull())
     in_bucket = Window.partitionBy(*keys, bkt)
     buckets = Window.partitionBy(*keys)
     local, totals, patches, combined = [], [], [], []
@@ -117,8 +127,14 @@ def bucketed_scan(d: DataFrame, keys: list[str], bkt: str, scans: list[Scan]) ->
             patches.append(_AGG[s.kind](tot).over(prior).alias(pat))
             pick = F.least if s.kind == "min" else F.greatest
             combined.append(pick(F.col(loc), F.col(pat)).alias(s.out))
-    summary = d.groupBy(*keys, bkt).agg(*totals).select(*keys, bkt, *patches)
-    out = d.select("*", *local).join(F.broadcast(summary), on=[*keys, bkt])
+    sk = [f"__bsk{j}__" for j in range(len(keys))]
+    summary = d.groupBy(*keys, bkt).agg(*totals).select(
+        *[F.col(k).alias(s) for k, s in zip(keys, sk)], F.col(bkt).alias("__bsb__"), *patches
+    )
+    on = [F.col(k).eqNullSafe(F.col(s)) for k, s in zip(keys, sk)]
+    out = d.select("*", *local).join(
+        F.broadcast(summary), on=[*on, F.col(bkt) == F.col("__bsb__")]
+    )
     outs = {s.out for s in scans}
     return out.select(*[c for c in d.columns if c not in outs], *combined)
 

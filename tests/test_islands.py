@@ -72,6 +72,10 @@ def test_bucketed_islands_match_single_window(spark):
     for i in range(300):
         s = rng.randrange(0, 200)
         rows.append(("chr1" if i % 3 else "chr2", s, s + rng.randrange(1, 30), i))
+    # A NULL Chromosome is an island group of its own under both plans; a
+    # NULL Start is dropped by both.
+    rows += [(None, 3, 9, 300), (None, 5, 20, 301), (None, 40, 44, 302)]
+    rows += [("chr1", None, 250, 303), (None, None, 7, 304)]
     df = spark.createDataFrame(rows, "Chromosome string, Start long, End long, rid long")
 
     def memberships(bucket_width):
@@ -86,6 +90,23 @@ def test_bucketed_islands_match_single_window(spark):
         return sorted(frozenset(v) for v in isl.values())
 
     assert memberships(4) == memberships(None)
+    assert {300, 301} in memberships(4) and {302} in memberships(4)
+
+
+def test_bucketed_islands_null_start_repro(spark):
+    """A NULL-Start row has a NULL bucket. It used to vanish from the
+    bucketed plan while its bucket total still shifted every real bucket's
+    patch (islands -1 and 0 here); the single-window plan merged it into the
+    first island. Both plans now drop it and number the rest from 0."""
+    from pyranges_1_x_spark.plans.islands import assign_islands
+
+    df = spark.createDataFrame(
+        [("chr1", None, 5), ("chr1", 1, 4), ("chr1", 10, 12)],
+        "Chromosome string, Start long, End long",
+    )
+    for width in (4, None):
+        out = assign_islands(df, ["Chromosome"], bucket_width=width).collect()
+        assert sorted((r["Start"], r["__island__"]) for r in out) == [(1, 0), (10, 1)], width
 
 
 def test_bucketed_islands_slack_and_bookends(spark):

@@ -880,6 +880,27 @@ def test_remove_boilerplate_lines_strips_shared_keeps_order(spark):
     assert untouched[1] == "NAV\nalpha\n\nbeta\nFOOTER"
 
 
+def test_quota_pair_null_keys_leave_the_order(spark):
+    """A NULL doc id hashes to NULL and leaves the order; it used to zero
+    its whole group (its bucket's total entered every real bucket's offset).
+    The cap still keeps the first 4 keyed docs by (hash, id)."""
+    from pyspark.sql import functions as F
+
+    from pyranges_1_x_spark.ml.dedup import md5_hash64
+    from pyranges_1_x_spark.ml.sampling import quota_sample, token_quota_sample
+
+    docs = spark.createDataFrame(
+        [(str(i) if i < 10 else None, "web", 1) for i in range(15)],
+        "doc_id string, source string, n long",
+    )
+    hashed = docs.filter("doc_id IS NOT NULL").withColumn("h", md5_hash64(F.col("doc_id"), 0))
+    first4 = [r["doc_id"] for r in sorted(hashed.collect(), key=lambda r: (r["h"], r["doc_id"]))][:4]
+    kept = quota_sample(docs, "source", 4).collect()
+    assert sorted(r["doc_id"] for r in kept) == sorted(first4)
+    kept = token_quota_sample(docs, "source", 4, tokens_col="n").collect()
+    assert sorted(r["doc_id"] for r in kept) == sorted(first4)
+
+
 def test_token_quota_sample_prefix_budget(spark):
     from pyspark.sql import functions as F
 
@@ -2369,9 +2390,9 @@ def test_bpe_train_checkpoint_rotation_frees_blocks(spark):
     blocks, not merely drop references: DataFrame.unpersist() is a no-op on
     local checkpoints (their blocks live on the LogicalRDD's internal RDD,
     not in the cache manager — r14 review find, verified on PySpark 4.1.2),
-    so _free_local_checkpoint reaches through the analyzed plan. A 12-merge
-    run with checkpoint_every=2 rotates up to 6 times; without the eager
-    free the session's persistent-RDD count grows by one per rotation."""
+    so plans/qcache.py:free_checkpoint reaches through the analyzed plan. A
+    12-merge run with checkpoint_every=2 rotates up to 6 times; without the
+    eager free the session's persistent-RDD count grows by one per rotation."""
     from pyranges_1_x_spark.ml.text import bpe_train
 
     sc = spark.sparkContext

@@ -74,6 +74,19 @@ def test_coverage_bruteforce(spark):
     assert got == brute_coverage(pa)
 
 
+def test_coverage_drops_null_coordinates(spark):
+    # A NULL-Start row covers nothing: neither its bucket total nor its lone
+    # End event may shift the other rows' depth.
+    schema = "Chromosome string, Start long, End long"
+    rows = [("chr1", 1, 4), ("chr1", 10, 12)]
+
+    def runs(rows):
+        df = GenomicRanges(spark.createDataFrame(rows, schema)).to_coverage().df
+        return sorted(map(tuple, df.toPandas()[["Chromosome", "Start", "End", "Value"]].values))
+
+    assert runs(rows + [("chr1", None, 11), ("chr1", 2, None)]) == runs(rows)
+
+
 def test_complement_roundtrip(spark):
     pa = random_frame(5, 40)
     a = GenomicRanges(spark.createDataFrame(pa))

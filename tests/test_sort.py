@@ -56,3 +56,25 @@ def test_sort_ranges_rank_matches_global_window(spark):
     )
     assert got.sort_values("rank").name.tolist() == expect
     assert sorted(got["rank"]) == list(range(1, 301))
+
+
+def test_sort_ranges_rank_null_coordinates(spark):
+    """The rank numbers exactly the rows a plain sort returns, in its order:
+    a NULL Start and a NULL Chromosome included (they used to drop out of
+    the rank while their bucket counts shifted every other rank)."""
+    g = _mk(
+        spark,
+        [
+            ("chr1", 5, 9, "a"),
+            ("chr1", None, 4, "b"),
+            (None, 1, 2, "c"),
+            ("chr2", 0, 1, "d"),
+            ("chr1", 300000, 300001, "e"),
+        ],
+    )
+    for reverse in (False, True):
+        plain = [r["name"] for r in g.sort_ranges(reverse=reverse).df.collect()]
+        ranked = g.sort_ranges(rank_col="rank", reverse=reverse).df.toPandas()
+        ranked = ranked.sort_values("rank")
+        assert list(ranked["rank"]) == [1, 2, 3, 4, 5]
+        assert list(ranked.name) == plain

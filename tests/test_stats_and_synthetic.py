@@ -301,6 +301,19 @@ def test_fdr_benjamini_hochberg(spark):
         assert abs(got[i] - expect[i]) < 1e-12, (i, got[i], expect[i])
 
 
+def test_fdr_null_pvalue_is_not_a_test(spark):
+    """A NULL p-value counts in neither n nor the ranks: the other nine get
+    the FDR of the nine-test family (it used to shift every FDR)."""
+    from pyranges_1_x_spark.functions.stats import fdr
+
+    ps = [0.05 * (i + 1) for i in range(9)] + [None]
+    df = spark.createDataFrame([(i, p) for i, p in enumerate(ps)], "i long, PValue double")
+    got = {r.i: r.FDR for r in fdr(df).collect()}
+    assert set(got) == set(range(9))
+    for i in range(9):
+        assert abs(got[i] - 0.45) < 1e-12, (i, got[i])
+
+
 def test_mcc_aorta_reference_doctest(spark):
     """Golden parity with the reference's mcc doctest (ext/stats.py:276-289):
     labels a=aorta, b=aorta, c=aorta2, genome length 2,100,000 — exact

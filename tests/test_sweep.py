@@ -4,9 +4,12 @@ local window)."""
 
 from __future__ import annotations
 
+import hashlib
 import random
 
 import pandas as pd
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from pyranges_1_x_spark.plans.interval_join import floordiv
@@ -115,3 +118,156 @@ def test_prefix_sweep_vs_brute(spark):
         for (pos, c1, c2), n in zip(zip(grp.pos, grp.d1.cumsum(), grp.d2.cumsum()), nxt):
             want[(k1, k2, pos)] = (c1, c2, n)
     assert {(r.k1, r.k2, r.pos): (r.c1, r.c2, r.nxt) for r in got} == want
+
+
+# --- every bucketed_scan client vs brute force / the single-window plan -----
+#
+# One row: (chrom or NULL, Start or NULL, length >= 1, NULL doc id?). A
+# NULL-Start row keeps a real End, the shape whose bucket total used to leak
+# into every real bucket's patch. Bucket width 3 (hash clients: 1 bit);
+# ``reverse`` picks the descending or ascending scan of asof and the sort.
+
+_row = st.tuples(
+    st.sampled_from(["c1", "c2", None]),
+    st.one_of(st.none(), st.integers(min_value=-10, max_value=30)),
+    st.integers(min_value=1, max_value=8),
+    st.booleans(),
+)
+
+
+def _md5h(i):
+    return int(hashlib.md5(f"{i}#0".encode()).hexdigest()[:15], 16)
+
+
+def _brute_bh(ps):
+    order = sorted(ps, key=lambda i: ps[i])
+    run = [ps[i] * len(ps) / (r + 1) for r, i in enumerate(order)]
+    for r in range(len(run) - 2, -1, -1):
+        run[r] = min(run[r], run[r + 1])
+    return {i: min(run[r], 1.0) for r, i in enumerate(order)}
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(rows=st.lists(_row, min_size=1, max_size=14), reverse=st.booleans())
+def test_bucketed_scan_clients_with_nulls(spark, monkeypatch, rows, reverse):
+    from pyranges_1_x_spark import names
+    from pyranges_1_x_spark.core import GenomicRanges
+    from pyranges_1_x_spark.functions.stats import fdr
+    from pyranges_1_x_spark.ml.sampling import (
+        deterministic_shuffle,
+        pack_training_examples,
+        quota_sample,
+    )
+    from pyranges_1_x_spark.plans.islands import assign_islands
+
+    recs = [
+        (c, s, (s if s is not None else 0) + ln, i, None if nid else i, ln)
+        for i, (c, s, ln, nid) in enumerate(rows)
+    ]
+    df = spark.createDataFrame(
+        recs, "Chromosome string, Start long, End long, idx long, doc_id long, n long"
+    )
+    placed = [r for r in recs if r[1] is not None]
+
+    # prefix_sweep: one delta row per (key, position), NULL positions included
+    deltas = {}
+    for c, s, _, _, _, ln in recs:
+        deltas[(c, s)] = deltas.get((c, s), 0) + ln
+    got = prefix_sweep(
+        spark.createDataFrame(
+            [(c, s, d) for (c, s), d in deltas.items()], "k string, pos long, d long"
+        ),
+        ["k"], "pos", ["d"], ["cum"], bucket_width=3, next_col="nxt",
+    ).collect()
+    free_tracked()
+    want = {}
+    for k in {c for c, _ in deltas}:
+        pts = sorted(s for c, s in deltas if c == k and s is not None)
+        cum = 0
+        for p, nxt in zip(pts, pts[1:] + [None]):
+            cum += deltas[(k, p)]
+            want[(k, p)] = (cum, nxt)
+    assert {(r.k, r.pos): (r.cum, r.nxt) for r in got} == want
+
+    # asof_extreme: even rows are data rows
+    side, agg = ("ge", "min") if reverse else ("le", "max")
+    got = asof_extreme(
+        df, ["Chromosome"], "Start", F.col("idx") % 2 == 0, "End",
+        side=side, agg=agg, bucket_width=3, out_col="cand",
+    ).collect()
+    want = {}
+    for c, s, _, i, _, _ in placed:
+        vals = [
+            e for c2, s2, e, i2, _, _ in placed
+            if c2 == c and i2 % 2 == 0 and (s2 >= s if side == "ge" else s2 <= s)
+        ]
+        want[i] = (min(vals) if agg == "min" else max(vals)) if vals else None
+    assert {r.idx: r.cand for r in got} == want
+
+    # the island scan: bucketed == single-window (NULL Start dropped by both)
+    def islands(width):
+        out = assign_islands(df, ["Chromosome"], bucket_width=width, tiebreak=["idx"])
+        members = {}
+        for r in out.collect():
+            members.setdefault((r.Chromosome, r["__island__"]), set()).add(r.idx)
+        return sorted(map(sorted, members.values()))
+
+    assert islands(3) == islands(None)
+
+    # nearest_distance: even rows vs odd rows; a NULL key or coordinate is
+    # nobody's neighbor (nearest_ranges' rank scans read the same
+    # _valid_rows input; test_setops_and_coverage checks them)
+    gr = GenomicRanges(df)
+    a, b = (GenomicRanges(df.filter(F.col("idx") % 2 == odd)) for odd in (0, 1))
+    want = {}
+    for c, s, e, i, _, _ in placed:
+        if i % 2 or c is None:
+            continue
+        ds = [
+            0 if max(s, s2) < min(e, e2) else max(s, s2) - min(e, e2) + 1
+            for c2, s2, e2, i2, _, _ in placed
+            if i2 % 2 and c2 == c
+        ]
+        if ds:
+            want[i] = min(ds)
+    assert {r.idx: r.Distance for r in a.nearest_distance(b, bin_size=3).df.collect()} == want
+
+    # fdr's rank: p from Start; a NULL p is not a test
+    pdf = df.select("idx", ((F.col("Start") + 10) / 40).alias("PValue"))
+    got = {r.idx: r.FDR for r in fdr(pdf).collect()}
+    free_tracked()
+    want = _brute_bh({i: (s + 10) / 40 for _, s, _, i, _, _ in placed})
+    assert got.keys() == want.keys()
+    assert all(abs(got[i] - want[i]) < 1e-12 for i in want)
+
+    # hash-ordered clients: a NULL doc id has no place in the order
+    keyed = sorted((_md5h(d), d, c, n) for c, _, _, _, d, n in recs if d is not None)
+    packed = pack_training_examples(df, 4, tokens_col="n", bucket_bits=1).collect()
+    offsets, run = {}, 0
+    for _, d, _, n in keyed:
+        offsets[d] = run
+        run += n
+    assert {r.doc_id: r.start_offset for r in packed} == offsets
+    shuffled = deterministic_shuffle(df, bucket_bits=1).collect()
+    assert {r.doc_id: r.shuffle_rank for r in shuffled} == {
+        d: rk for rk, (_, d, _, _) in enumerate(keyed, start=1)
+    }
+    got = quota_sample(df, "Chromosome", 2, bucket_bits=1, out_col="rk").collect()
+    want = {}
+    for c in {c for _, _, c, _ in keyed}:
+        grp = [d for _, d, c2, _ in keyed if c2 == c][:2]
+        want.update({d: rk for rk, d in enumerate(grp, start=1)})
+    assert {r.doc_id: r.rk for r in got} == want
+
+    # sort_ranges(rank_col=): ranks number exactly the plain sort's rows
+    monkeypatch.setattr(names, "DEFAULT_BIN_SIZE", 3)
+    coords = ["Chromosome", "Start", "End"]
+    plain = [tuple(r) for r in gr.sort_ranges(reverse=reverse).df.select(*coords).collect()]
+    ranked = sorted(gr.sort_ranges(rank_col="rk", reverse=reverse).df.collect(), key=lambda r: r.rk)
+    assert [r.rk for r in ranked] == list(range(1, len(recs) + 1))
+    assert [tuple(r[c] for c in coords) for r in ranked] == plain
