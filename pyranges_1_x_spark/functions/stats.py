@@ -87,13 +87,14 @@ def _dual_depth_lengths(a: GenomicRanges, bdf: DataFrame, keys: list[str]) -> Da
     segment sums, so the values are bit-identical to the merged-relation
     formulation (zero-length intervals net +1-1 at one point and
     contribute nothing either way; interior event points split segments
-    without changing sums).
+    without changing sums). Rows with a NULL key, Start or End are dropped
+    from both sets (plans/sweep.py:interval_rows), as the equality-keyed
+    set_intersect_overlaps never matches them.
     """
-    from pyranges_1_x_spark.plans.sweep import prefix_sweep
+    from pyranges_1_x_spark.plans.sweep import interval_rows, prefix_sweep
 
-    adf = a.df
     ev = []
-    for src, is_a in ((adf, True), (bdf, False)):
+    for src, is_a in ((interval_rows(a.df, keys), True), (interval_rows(bdf, keys), False)):
         for pos, d in ((nm.START_COL, 1), (nm.END_COL, -1)):
             ev.append(
                 src.select(

@@ -34,6 +34,14 @@ def _bucket_shift(hash_fn, bucket_bits: int) -> int:
     return (64 if hash_fn is xxhash64_fn else 60) - bucket_bits
 
 
+def _order_hash(hash_fn, key_col: str, seed: int) -> Column:
+    """The hash that places a row in a sampling order: NULL for a NULL key
+    under any ``hash_fn`` (``md5_hash64`` gives NULL already; ``xxhash64``
+    hashes NULL to its seed), so ``bucketed_scan`` drops the row — a row
+    without identity has no stable place in a deterministic order."""
+    return F.when(F.col(key_col).isNotNull(), hash_fn(F.col(key_col), seed))
+
+
 def hash_keep(key: Column, fraction: float, seed: int = 0, hash_fn=md5_hash64) -> Column:
     """Boolean keep-decision: ``hash(key, seed) mod 1e6 < fraction * 1e6``.
     Changing ``seed`` draws an independent subset; fractions are honored in
@@ -124,8 +132,8 @@ def pack_training_examples(
     ``bucket_bits`` form uniform buckets that PREFIX the total order; the
     running token sum is a per-bucket window plus one broadcast prefix
     offset per bucket (2^bits summary rows) — a ``bucketed_scan`` sum. A row
-    whose hash is NULL (a NULL id under ``md5_hash64``) has no place in the
-    order and is dropped. Token counting is a row-local JVM expression;
+    with a NULL id has no place in the order and is dropped
+    (``_order_hash``). Token counting is a row-local JVM expression;
     integer arithmetic end-to-end (oracle-exact).
     """
     from pyranges_1_x_spark.plans.interval_join import floordiv
@@ -148,7 +156,7 @@ def pack_training_examples(
     shift = _bucket_shift(hash_fn, bucket_bits)
     d = (
         df.select(F.col(id_col), nt.alias("__nt__"))
-        .withColumn("__h__", hash_fn(F.col(id_col), seed))
+        .withColumn("__h__", _order_hash(hash_fn, id_col, seed))
         .withColumn("__bkt__", F.shiftright("__h__", shift))
     )
     order = [F.col("__h__").asc(), F.col(id_col).asc()]
@@ -176,8 +184,8 @@ def _grouped_prefix_keep(
     whose INCLUSIVE running total is <= ``limit``. One
     ``plans/sweep.py:bucketed_scan`` sum per group over the hash's high
     ``bucket_bits`` (summary <= #groups * 2^bits rows). A NULL group
-    (missing domain/source) is a quota group of its own; a row whose hash
-    is NULL (a NULL key under ``md5_hash64``) leaves the order.
+    (missing domain/source) is a quota group of its own; a row with a NULL
+    key leaves the order (``_order_hash``).
 
     Returns the input columns + ``__m__`` (the row's measure) + ``__run__``
     (the group's inclusive running total at this row).
@@ -189,7 +197,7 @@ def _grouped_prefix_keep(
     shift = _bucket_shift(hash_fn, bucket_bits)
     d = (
         df.withColumn("__m__", measure)
-        .withColumn("__h__", hash_fn(F.col(key_col), seed))
+        .withColumn("__h__", _order_hash(hash_fn, key_col, seed))
         .withColumn("__bkt__", F.shiftright("__h__", shift))
     )
     order = [F.col("__h__").asc(), F.col(key_col).asc()]
@@ -303,13 +311,13 @@ def deterministic_shuffle(
     total order, so rank = per-bucket ``row_number`` + a broadcast prefix
     offset from one summary row per bucket — the ``bucketed_scan`` row_number
     that ``sort_ranges(rank_col=...)`` also uses, here with provably balanced
-    buckets because the bucket key is a hash prefix. A row whose hash is NULL
-    is dropped (see ``pack_training_examples``).
+    buckets because the bucket key is a hash prefix. A row with a NULL key
+    is dropped (``_order_hash``).
     """
     if not 1 <= bucket_bits <= 40:
         raise ValueError("bucket_bits must be in [1, 40]")
     shift = _bucket_shift(hash_fn, bucket_bits)
-    d = df.withColumn("__h__", hash_fn(F.col(key_col), seed)).withColumn(
+    d = df.withColumn("__h__", _order_hash(hash_fn, key_col, seed)).withColumn(
         "__bkt__", F.shiftright("__h__", shift)
     )
     order = [F.col("__h__").asc(), F.col(key_col).asc()]

@@ -33,13 +33,14 @@ def to_coverage(
     ``value_col`` weights each interval (reference value_col); ``rpm``
     normalizes by 1e6/row-count (reference methods/to_rle.py:59-61);
     ``drop_zero`` removes zero-depth runs between islands. Rows with a NULL
-    Start or End cover nothing and are dropped (and not counted by ``rpm``).
+    key, Start or End cover nothing and are dropped (and not counted by
+    ``rpm``; plans/sweep.py:interval_rows).
     """
-    from pyranges_1_x_spark.plans.sweep import prefix_sweep
+    from pyranges_1_x_spark.plans.sweep import interval_rows, prefix_sweep
 
     keys = self.group_keys(use_strand)
     val = F.col(value_col).cast("double") if value_col else F.lit(1).cast("long")
-    d = self.df.filter(F.col(nm.START_COL).isNotNull() & F.col(nm.END_COL).isNotNull())
+    d = interval_rows(self.df, keys)
     starts = d.select(*keys, F.col(nm.START_COL).alias("__pos__"), val.alias("__delta__"))
     ends = d.select(*keys, F.col(nm.END_COL).alias("__pos__"), (-val).alias("__delta__"))
     deltas = starts.unionByName(ends).groupBy(*keys, "__pos__").agg(
@@ -80,10 +81,13 @@ def coverage_ratio(
     ONE event sweep carries both cumulative sums (value and count deltas in
     the same window); runs where depth is zero (or the ratio undefined) yield
     null. ``defragment`` merges adjacent runs with equal ratio. Returns
-    (keys..., Start, End, ratio_out[, Value, Depth])."""
+    (keys..., Start, End, ratio_out[, Value, Depth]). Rows with a NULL key,
+    Start or End are dropped (plans/sweep.py:interval_rows)."""
+    from pyranges_1_x_spark.plans.sweep import interval_rows, prefix_sweep
+
     keys = self.group_keys(use_strand)
     val = F.col(value_col).cast("double")
-    d = self.df
+    d = interval_rows(self.df, keys)
     starts = d.select(
         *keys, F.col(nm.START_COL).alias("__pos__"),
         val.alias("__dv__"), F.lit(1).cast("long").alias("__dc__"),
@@ -95,8 +99,6 @@ def coverage_ratio(
     deltas = starts.unionByName(ends).groupBy(*keys, "__pos__").agg(
         F.sum("__dv__").alias("__dv__"), F.sum("__dc__").alias("__dc__")
     )
-    from pyranges_1_x_spark.plans.sweep import prefix_sweep
-
     runs = prefix_sweep(
         deltas, keys, "__pos__", ["__dv__", "__dc__"], ["__cv__", "__cc__"],
         bucket_width=self.resolve_bin(None) * 16,

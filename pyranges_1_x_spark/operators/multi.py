@@ -30,8 +30,11 @@ def count_overlaps_matrix(
     ONE event-point sweep — union of tagged ±1 deltas, one hash aggregation,
     one window computing all N running sums in a single pass. With explicit
     ``features`` (arbitrary, unaligned) it falls back to N binned count joins.
+    The sweep drops rows with a NULL key, Start or End
+    (plans/sweep.py:interval_rows), which the count joins never match.
     """
     from pyranges_1_x_spark import concat
+    from pyranges_1_x_spark.plans.sweep import interval_rows, prefix_sweep
 
     items = list(grs.items())
     if features is not None:
@@ -50,7 +53,7 @@ def count_overlaps_matrix(
     n = len(items)
     evs = []
     for idx, (_, g) in enumerate(items):
-        d = g.remove_strand().df if use_strand is False else g.df
+        d = interval_rows(g.remove_strand().df if use_strand is False else g.df, keys)
         for pos_col, delta in ((nm.START_COL, 1), (nm.END_COL, -1)):
             evs.append(
                 d.select(
@@ -62,8 +65,6 @@ def count_overlaps_matrix(
                     ],
                 )
             )
-    from pyranges_1_x_spark.plans.sweep import prefix_sweep
-
     ev = evs[0]
     for e in evs[1:]:
         ev = ev.unionByName(e)

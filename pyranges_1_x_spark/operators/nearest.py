@@ -6,7 +6,8 @@ overlapping pairs have Distance 0; non-overlapping (incl. touching) have
 ``gap + 1`` (touching => 1). Rows with no eligible neighbor are dropped.
 
 Both operators first drop invalid rows from both inputs (``_valid_rows``):
-a NULL key, a NULL Start, a NULL End or Start > End has no neighbor and is
+a row the sweeps do not place (a NULL key, Start or End,
+``plans/sweep.py:interval_rows``) or with Start > End has no neighbor and is
 nobody's neighbor.
 
 ``nearest_distance`` (self rows + Distance, no other columns) is ONE
@@ -82,21 +83,15 @@ from pyranges_1_x_spark.core import GenomicRanges
 from pyranges_1_x_spark.plans.ids import STABLE_ID_COLS, with_stable_id
 from pyranges_1_x_spark.plans.interval_join import binned_join, floordiv, rename_keys
 from pyranges_1_x_spark.plans.qcache import persist_tracked
-from pyranges_1_x_spark.plans.sweep import Scan, asof_extreme, bucketed_scan
+from pyranges_1_x_spark.plans.sweep import Scan, asof_extreme, bucketed_scan, interval_rows
 
 _SID = STABLE_ID_COLS
 
 
 def _valid_rows(df: DataFrame, keys: list[str]) -> DataFrame:
-    """The rows both nearest operators see: a row with a NULL key, a NULL
-    Start, a NULL End or Start > End has no neighbor and is nobody's neighbor
-    (the comparison is NULL, so the filter drops NULL coordinates too; keys
-    match by equality, as in the overlap join, though bucketed_scan would
-    group NULL keys). Empty rows (Start == End) stay."""
-    ok = F.col(nm.START_COL) <= F.col(nm.END_COL)
-    for k in keys:
-        ok &= F.col(k).isNotNull()
-    return df.filter(ok)
+    """The rows both nearest operators see (module docstring). Empty rows
+    (Start == End) stay."""
+    return interval_rows(df, keys).filter(F.col(nm.START_COL) <= F.col(nm.END_COL))
 
 
 def _resolve_legs(self: GenomicRanges, direction: str):

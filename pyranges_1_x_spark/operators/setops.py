@@ -291,16 +291,18 @@ def split_overlaps(
 ) -> GenomicRanges:
     """Atomize intervals at every Start/End boundary per group; ``between``
     keeps the segments in gaps too (reference methods/split.py:12-37: concat
-    starts+ends, sort, dedupe, zip adjacent — here: union, distinct, lead)."""
+    starts+ends, sort, dedupe, zip adjacent — here: union, distinct, lead).
+    Rows with a NULL key, Start or End are dropped
+    (plans/sweep.py:interval_rows)."""
+    from pyranges_1_x_spark.plans.sweep import interval_rows, prefix_sweep
+
     keys = self.group_keys(use_strand, match_by)
-    base = self.df.select(*keys, nm.START_COL, nm.END_COL)
+    base = interval_rows(self.df, keys).select(*keys, nm.START_COL, nm.END_COL)
     # Event sweep: at each distinct boundary point, the running (+starts
     # -ends) depth tells whether the following segment is inside >= 1 input
     # interval — so "covered" needs no join at all, just the same window that
     # forms the segments. Zero-length inputs contribute +1-1 at one point
     # (depth unchanged), correctly splitting without covering.
-    from pyranges_1_x_spark.plans.sweep import prefix_sweep
-
     starts = base.select(*keys, F.col(nm.START_COL).alias("__p__"), F.lit(1).alias("__d__"))
     ends = base.select(*keys, F.col(nm.END_COL).alias("__p__"), F.lit(-1).alias("__d__"))
     deltas = starts.unionByName(ends).groupBy(*keys, "__p__").agg(

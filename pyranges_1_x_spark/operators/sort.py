@@ -21,8 +21,11 @@ from pyranges_1_x_spark.plans.sweep import Scan, bucketed_scan
 
 
 def natkey(col: Column) -> Column:
-    stripped = F.regexp_replace(col, "^chr", "")
-    is_num = stripped.rlike("^[0-9]+$")
+    # Plain string functions, no regex: the ranked sort evaluates this on
+    # every row of both scan branches (two regexes per row cost ~20% of the
+    # sort_rank query at sf0.1 on 4 cores).
+    stripped = F.when(col.startswith("chr"), col.substr(F.lit(4), F.length(col))).otherwise(col)
+    is_num = (stripped != "") & (F.translate(stripped, "0123456789", "") == "")
     return F.when(is_num, F.lpad(stripped, 12, "0")).otherwise(
         F.concat(F.lit("~"), stripped)
     )

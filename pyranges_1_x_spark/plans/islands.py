@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from pyranges_1_x_spark.names import DEFAULT_BIN_SIZE, END_COL, ISLAND_COL, START_COL
 from pyranges_1_x_spark.plans.interval_join import floordiv
-from pyranges_1_x_spark.plans.sweep import Scan, bucketed_scan
+from pyranges_1_x_spark.plans.sweep import Scan, bucketed_scan, interval_rows
 
 __all__ = ["assign_islands", "island_agg"]
 
@@ -96,8 +96,8 @@ def assign_islands(
     size estimate says the input fits comfortably in one task per key-group
     (see ``DEFAULT_SINGLE_WINDOW_BYTES``), the single-window plan runs
     instead. ``bucket_width=None``/``0`` forces the single-window plan.
-    Rows with a NULL Start have no place in the scan and are dropped under
-    both plans; a NULL key is a group of its own.
+    Rows with a NULL key, Start or End have no place in the scan and are
+    dropped under both plans (plans/sweep.py:interval_rows).
 
     The bucketed plan's bucket-tagged input feeds TWO branches (the bucket
     summary and the bucket-local window), so an upstream-derived input is
@@ -108,7 +108,7 @@ def assign_islands(
     rounds, min 6.90s without vs 8.92s with (OPTIMIZATION_r16.md §8) — the
     phase-2 summary re-scan is cheaper than writing+reading the cache.
     """
-    df = df.filter(F.col(START_COL).isNotNull())
+    df = interval_rows(df, keys)
     if bucket_width and _single_window_ok(df):
         bucket_width = None
     order = [F.col(START_COL).asc(), F.col(END_COL).asc()] + [

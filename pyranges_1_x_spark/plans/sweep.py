@@ -19,10 +19,17 @@ Rows tied on the leading order column share a bucket, so the local window
 settles every tie rule. Empty buckets are skipped naturally (bucket ids come
 from the data).
 
-The NULL rule, in one place: a row whose bucket is NULL (a NULL position or
-hash) has no place in the order and is dropped before either phase reads the
-input; a NULL key is a group of its own, as in ``Window.partitionBy``, so the
-patch join matches keys null-safe.
+The NULL rule, in two layers. The primitive: a row whose bucket is NULL (a
+NULL position or hash) has no place in the order and is dropped before either
+phase reads the input; a NULL key is a group of its own, as in
+``Window.partitionBy``, so the patch join matches keys null-safe (the quota
+pair's NULL group is a real quota group; ``sort_ranges`` ranks NULLs first).
+The interval sweeps: :func:`interval_rows` is the one test of which interval
+rows a sweep places — every key, Start and End non-NULL. A NULL key names no
+chromosome (strand, match_by group), so the event builders (coverage,
+coverage_ratio, split, count_overlaps_matrix, forbes/jaccard), the island
+planner and nearest all drop such rows, which are also the rows the
+equality-keyed overlap join never matches.
 
 Clients, with no hand-written exception: ``prefix_sweep`` (coverage,
 coverage_ratio, split, count_overlaps_matrix, forbes/jaccard),
@@ -60,10 +67,11 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyranges_1_x_spark.names import END_COL, START_COL
 from pyranges_1_x_spark.plans.interval_join import floordiv
 from pyranges_1_x_spark.plans.qcache import persist_tracked
 
-__all__ = ["Scan", "bucketed_scan", "prefix_sweep", "asof_extreme"]
+__all__ = ["Scan", "bucketed_scan", "interval_rows", "prefix_sweep", "asof_extreme"]
 
 _AGG = {"sum": F.sum, "min": F.min, "max": F.max}
 
@@ -137,6 +145,15 @@ def bucketed_scan(d: DataFrame, keys: list[str], bkt: str, scans: list[Scan]) ->
     )
     outs = {s.out for s in scans}
     return out.select(*[c for c in d.columns if c not in outs], *combined)
+
+
+def interval_rows(df: DataFrame, keys: list[str]) -> DataFrame:
+    """The rows of ``df`` an interval sweep places: every key, Start and End
+    non-NULL (module docstring, the NULL rule)."""
+    placed = F.col(START_COL).isNotNull() & F.col(END_COL).isNotNull()
+    for k in keys:
+        placed &= F.col(k).isNotNull()
+    return df.filter(placed)
 
 
 def prefix_sweep(

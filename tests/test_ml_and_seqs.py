@@ -3039,6 +3039,19 @@ def test_sampling_edge_guards_r14(spark):
     ranks = deterministic_shuffle(docs).toPandas()
     assert set(ranks["shuffle_rank"]) == {1, 2, 3}  # starts at 1, no gaps
     assert ranks["doc_id"].notna().all()
+    # (c) under xxhash64 too, which hashes a NULL id to its seed, not NULL
+    from pyranges_1_x_spark.ml.dedup import xxhash64_fn
+
+    xdocs = docs.union(spark.createDataFrame([(None, "p q")], docs.schema))
+    xpacked = pack_training_examples(xdocs, budget=4, hash_fn=xxhash64_fn).collect()
+    assert {r["doc_id"] for r in xpacked} == {1, 2, 3} and len(xpacked) == 3
+    xorder = sorted(xpacked, key=lambda r: r["start_offset"])
+    assert xorder[0]["start_offset"] == 0
+    for a, b in zip(xorder, xorder[1:]):
+        assert b["start_offset"] == a["start_offset"] + a["n_tokens"]
+    xranks = deterministic_shuffle(xdocs, hash_fn=xxhash64_fn).collect()
+    assert {r["doc_id"] for r in xranks} == {1, 2, 3}
+    assert sorted(r["shuffle_rank"] for r in xranks) == [1, 2, 3]
 
     # (d) in-place n_tokens substitution — no duplicate column
     pre = docs.filter("doc_id IS NOT NULL").withColumn("n_tokens", F.lit(7))

@@ -74,17 +74,27 @@ def test_coverage_bruteforce(spark):
     assert got == brute_coverage(pa)
 
 
-def test_coverage_drops_null_coordinates(spark):
-    # A NULL-Start row covers nothing: neither its bucket total nor its lone
-    # End event may shift the other rows' depth.
-    schema = "Chromosome string, Start long, End long"
-    rows = [("chr1", 1, 4), ("chr1", 10, 12)]
+def test_event_sweeps_drop_unplaced_rows(spark):
+    # A row with a NULL Start, End or Chromosome covers nothing in any event
+    # sweep: neither its bucket total nor its lone event may shift the other
+    # rows' depth, and a NULL Chromosome is no group.
+    from pyranges_1_x_spark import count_overlaps_matrix
 
-    def runs(rows):
-        df = GenomicRanges(spark.createDataFrame(rows, schema)).to_coverage().df
-        return sorted(map(tuple, df.toPandas()[["Chromosome", "Start", "End", "Value"]].values))
+    schema = "Chromosome string, Start long, End long, Score double"
+    rows = [("chr1", 1, 4, 2.0), ("chr1", 3, 8, 1.0), ("chr1", 10, 12, 4.0)]
+    bad = [("chr1", None, 11, 1.0), ("chr1", 2, None, 1.0), (None, 0, 20, 1.0)]
 
-    assert runs(rows + [("chr1", None, 11), ("chr1", 2, None)]) == runs(rows)
+    def sweeps(rows):
+        g = GenomicRanges(spark.createDataFrame(rows, schema))
+        outs = [
+            g.to_coverage(rpm=True),
+            g.coverage_ratio(value_col="Score", use_strand=False),
+            g.split_overlaps(use_strand=False, between=True),
+            count_overlaps_matrix({"n_a": g, "n_b": g}, use_strand=False),
+        ]
+        return [sorted(map(tuple, o.df.collect())) for o in outs]
+
+    assert sweeps(rows + bad) == sweeps(rows)
 
 
 def test_complement_roundtrip(spark):

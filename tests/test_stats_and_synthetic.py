@@ -314,6 +314,23 @@ def test_fdr_null_pvalue_is_not_a_test(spark):
         assert abs(got[i] - 0.45) < 1e-12, (i, got[i])
 
 
+def test_jaccard_forbes_null_chromosome_matches_set_intersect(spark):
+    """A NULL Chromosome in both frames matches nothing: the one-sweep
+    jaccard/forbes intersection equals set_intersect_overlaps' length (it
+    used to count the two NULL-Chromosome rows as one shared group)."""
+    from pyranges_1_x_spark.functions.stats import forbes_statistic, jaccard_statistic
+
+    df = spark.createDataFrame(
+        [("chr1", 0, 10), (None, 0, 10)], "Chromosome string, Start long, End long"
+    )
+    a = b = GenomicRanges(df)
+    inter = a.set_intersect_overlaps(b).df.toPandas()
+    assert (inter.End - inter.Start).sum() == 10
+    row = jaccard_statistic(a, b).collect()[0]
+    assert (row["intersection_length"], row["union_length"]) == (10, 10)
+    assert forbes_statistic(a, b, 100).collect()[0]["forbes"] == 10.0
+
+
 def test_mcc_aorta_reference_doctest(spark):
     """Golden parity with the reference's mcc doctest (ext/stats.py:276-289):
     labels a=aorta, b=aorta, c=aorta2, genome length 2,100,000 — exact

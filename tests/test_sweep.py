@@ -194,6 +194,23 @@ def test_bucketed_scan_clients_with_nulls(spark, monkeypatch, rows, reverse):
             want[(k, p)] = (cum, nxt)
     assert {(r.k, r.pos): (r.cum, r.nxt) for r in got} == want
 
+    # to_coverage, an event builder over prefix_sweep: a NULL Chromosome or
+    # Start places no row (plans/sweep.py:interval_rows)
+    gr = GenomicRanges(df)
+    want = set()
+    for k in {c for c, _, _, _, _, _ in placed if c is not None}:
+        ev = {}
+        for c, s, e, _, _, _ in placed:
+            if c == k:
+                ev[s] = ev.get(s, 0) + 1
+                ev[e] = ev.get(e, 0) - 1
+        pts, depth = sorted(ev), 0
+        for p, nxt in zip(pts, pts[1:]):
+            depth += ev[p]
+            want.add((k, p, nxt, depth))
+    assert set(map(tuple, gr.to_coverage().df.collect())) == want
+    free_tracked()
+
     # asof_extreme: even rows are data rows
     side, agg = ("ge", "min") if reverse else ("le", "max")
     got = asof_extreme(
@@ -222,7 +239,6 @@ def test_bucketed_scan_clients_with_nulls(spark, monkeypatch, rows, reverse):
     # nearest_distance: even rows vs odd rows; a NULL key or coordinate is
     # nobody's neighbor (nearest_ranges' rank scans read the same
     # _valid_rows input; test_setops_and_coverage checks them)
-    gr = GenomicRanges(df)
     a, b = (GenomicRanges(df.filter(F.col("idx") % 2 == odd)) for odd in (0, 1))
     want = {}
     for c, s, e, i, _, _ in placed:
