@@ -276,7 +276,7 @@ def mcc(
 
     import pandas as pd
 
-    from pyranges_1_x_spark.plans.interval_join import binned_join, rename_keys
+    from pyranges_1_x_spark.plans.interval_join import binned_join
 
     items = [(k, g.merge_overlaps(use_strand=False)) for k, g in grs.items()]
     tagged = None
@@ -306,20 +306,16 @@ def mcc(
         .collect()
     }
 
-    right, rkeys = rename_keys(
-        tagged.select(
-            nm.CHROM_COL,
-            F.col(nm.START_COL).alias("__rs__"),
-            F.col(nm.END_COL).alias("__re__"),
-            F.col("__tag__").alias("__rtag__"),
-        ),
-        [nm.CHROM_COL],
+    right = tagged.select(
+        nm.CHROM_COL,
+        F.col(nm.START_COL).alias("__rs__"),
+        F.col(nm.END_COL).alias("__re__"),
+        F.col("__tag__").alias("__rtag__"),
     )
     pairs = binned_join(
         tagged,
         right,
         keys=[nm.CHROM_COL],
-        right_keys=rkeys,
         how="inner",
         bin_size=bin_size,
         rstart="__rs__",

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from pyranges_1_x_spark import names as nm
 from pyranges_1_x_spark.core import GenomicRanges
-from pyranges_1_x_spark.plans.interval_join import floordiv
+from pyranges_1_x_spark.plans.interval_join import bin_range
 
 
 def extend_ranges(
@@ -80,9 +80,8 @@ def tile_ranges(
     order, which a distributed engine does not define)."""
     del use_strand, match_by
     d = self.df
-    lo = floordiv(F.col(nm.START_COL), tile_size)
-    hi = F.greatest(lo, floordiv(F.col(nm.END_COL) - 1, tile_size))
-    d = d.withColumn("__tile__", F.explode(F.sequence(lo, hi)))
+    tiles = F.sequence(*bin_range(F.col(nm.START_COL), F.col(nm.END_COL), tile_size))
+    d = d.withColumn("__tile__", F.explode(tiles))  # a NULL Start has no tiles
     tile_start = F.col("__tile__") * tile_size
     tile_end = tile_start + tile_size
     if overlap_column is not None:

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from pyranges_1_x_spark import names as nm
 from pyranges_1_x_spark.core import GenomicRanges
-from pyranges_1_x_spark.plans.interval_join import binned_join, rename_keys
+from pyranges_1_x_spark.plans.interval_join import binned_join
 
 _CS, _CE = "__mg_cs__", "__mg_ce__"
 
@@ -185,13 +185,10 @@ def map_to_local(
     rsel = refcum.select(
         *keys, *[F.col(c).alias(a) for c, a in sel.items()], F.col(_CS), F.col(_CE)
     )
-    right, rkeys = rename_keys(rsel, keys)
-
     joined = binned_join(
         self.df,
-        right,
+        rsel,
         keys=keys,
-        right_keys=rkeys,
         how="inner",
         bin_size=bin_size,
         rstart="__r_start__",

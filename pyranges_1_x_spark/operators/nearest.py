@@ -81,7 +81,7 @@ from pyspark.sql import functions as F
 from pyranges_1_x_spark import names as nm
 from pyranges_1_x_spark.core import GenomicRanges
 from pyranges_1_x_spark.plans.ids import STABLE_ID_COLS, with_stable_id
-from pyranges_1_x_spark.plans.interval_join import binned_join, floordiv, rename_keys
+from pyranges_1_x_spark.plans.interval_join import binned_join, floordiv
 from pyranges_1_x_spark.plans.qcache import persist_tracked
 from pyranges_1_x_spark.plans.sweep import Scan, asof_extreme, bucketed_scan, interval_rows
 
@@ -249,12 +249,10 @@ def nearest_ranges(
     # Candidate (left-id, right-id, dist) from the three generators.
     cands = []
     if not exclude_overlaps:
-        rb, rkeys = rename_keys(rcoords, keys)
         ov = binned_join(
             left.select(*_SID, *keys, nm.START_COL, nm.END_COL),
-            rb,
+            rcoords,
             keys=keys,
-            right_keys=rkeys,
             how="inner",
             bin_size=bin_size,
             rstart="__rs__",

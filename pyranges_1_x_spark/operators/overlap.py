@@ -5,9 +5,11 @@ Reference surface: ``overlap`` (semi), ``join_overlaps``, ``intersect_overlaps``
 ``/root/reference/pyranges1/range_frame/range_frame.py:315-607``,
 ``methods/overlap.py:50-101``, wrappers ``core/pyranges_main.py:769-876,1147,2393,5309``.
 
-All variants are SINGLE-BRANCH plans over the binned planners (see
-plans/interval_join.py): semi/anti = LEFT SEMI / LEFT ANTI via ``binned_exists``
-(never materializes the pair relation), count = left join + hash agg. No
+Every variant composes over the binned planner (plans/interval_join.py):
+semi/anti = LEFT SEMI / LEFT ANTI via ``binned_exists`` (never materializes
+the pair relation), count = one left join + one hash agg, intersect and the
+inner join = one inner join. Left, right and outer joins are two branches,
+the pairs and the unmatched rows, glued by a content-based union. No
 self-join id comparisons.
 """
 
@@ -18,11 +20,10 @@ from pyspark.sql import functions as F
 from pyranges_1_x_spark import names as nm
 from pyranges_1_x_spark.core import GenomicRanges
 from pyranges_1_x_spark.plans.interval_join import (
-    _split_payload,
     binned_exists,
     binned_join,
+    collapse_bins,
     interval_join,
-    rename_keys,
     top1_overlap,
 )
 
@@ -30,11 +31,9 @@ _LID = "__ij_lid__"
 
 
 def _right_coords(odf, keys):
-    right, rkeys = rename_keys(
-        odf.select(*keys, F.col(nm.START_COL).alias("__rs__"), F.col(nm.END_COL).alias("__re__")),
-        keys,
+    return odf.select(
+        *keys, F.col(nm.START_COL).alias("__rs__"), F.col(nm.END_COL).alias("__re__")
     )
-    return right, rkeys
 
 
 def _exists(
@@ -53,19 +52,17 @@ def _exists(
     any-flag aggregate built |pairs| rows before reducing)."""
     odf, keys = self._binary_prepared(other, strand_behavior, match_by)
     bin_size = self.resolve_bin(bin_size)
-    right, rkeys = _right_coords(odf, keys)
     return binned_exists(
         self.df,
-        right,
+        _right_coords(odf, keys),
         keys=keys,
-        right_keys=rkeys,
         anti=anti,
         slack=slack,
         contained=contained,
         bin_size=bin_size,
         rstart="__rs__",
         rend="__re__",
-    ).drop("__any__")
+    )
 
 
 def overlap(
@@ -101,12 +98,10 @@ def overlap(
     if multiple:
         odf, keys = self._binary_prepared(other, strand_behavior, match_by)
         bin_size = self.resolve_bin(bin_size)
-        right, rkeys = _right_coords(odf, keys)
         joined = binned_join(
             self.df,
-            right,
+            _right_coords(odf, keys),
             keys=keys,
-            right_keys=rkeys,
             how="inner",
             slack=slack,
             contained=contained_intervals_only,
@@ -152,7 +147,6 @@ def join_overlaps(
     suffix: str = nm.JOIN_SUFFIX,
     report_overlap_column: str | None = None,
     bin_size: int | None = None,
-    broadcast_other: bool = False,
 ):
     """Attribute join on overlap (reference range_frame.py:315-395, methods/join.py:13-71).
 
@@ -173,7 +167,6 @@ def join_overlaps(
         suffix=suffix,
         report_overlap_column=report_overlap_column,
         bin_size=bin_size,
-        broadcast_right=broadcast_other,
     )
     return GenomicRanges.wrap(out)
 
@@ -203,12 +196,10 @@ def intersect_overlaps(
         )
     odf, keys = self._binary_prepared(other, strand_behavior, match_by)
     bin_size = self.resolve_bin(bin_size)
-    right, rkeys = _right_coords(odf, keys)
     joined = binned_join(
         self.df,
-        right,
+        _right_coords(odf, keys),
         keys=keys,
-        right_keys=rkeys,
         how="inner",
         slack=slack,
         bin_size=bin_size,
@@ -248,49 +239,20 @@ def count_overlaps(
     count_col = overlap_col
     odf, keys = self._binary_prepared(other, strand_behavior, match_by)
     bin_size = self.resolve_bin(bin_size)
-    right, rkeys = _right_coords(odf, keys)
     joined = binned_join(
         self.df,
-        right,
+        _right_coords(odf, keys),
         keys=keys,
-        right_keys=rkeys,
         how="left",
         slack=slack,
         bin_size=bin_size,
         rstart="__rs__",
         rend="__re__",
-        keep_unmatched_bins=True,  # the groupBy below collapses them: one shuffle saved
+        keep_unmatched_bins=True,  # the collapse below groups them: one shuffle saved
     )
-    groupable, key_fields, first_fields = _split_payload(self.df.schema.fields)
-    if groupable:
-        # r15 (optimization round): payload rides in the GROUP BY key, not
-        # in any_value(struct) — a struct-buffered first/any_value cannot
-        # hash-aggregate, so Spark planned a SortAggregate (two full sorts
-        # of the bin-exploded join output; plans/r15/count_overlaps_before
-        # .txt ops 21-25). Grouping by (_LID, payload) is identical (the
-        # payload is functionally dependent on the unique _LID) and keeps
-        # the plan a map-side-combining HashAggregate. r16: top-level float
-        # payload columns ride as first() aggregates to preserve -0.0/NaN
-        # bits (VERDICT r15 #5; see plans/interval_join._split_payload).
-        out = (
-            joined.groupBy(_LID, *[f.name for f in key_fields])
-            .agg(
-                F.sum(F.when(F.col("__matched__"), 1).otherwise(0)).alias(count_col),
-                *[F.first(f.name).alias(f.name) for f in first_fields],
-            )
-            .select(*self.df.columns, F.col(count_col))
-        )
-        return GenomicRanges(out)
-    payload = F.struct(*[F.col(c) for c in self.df.columns])
-    out = (
-        joined.groupBy(_LID)  # slim key; payload rides in any_value(struct)
-        .agg(
-            F.any_value(payload).alias("__p__"),
+    return GenomicRanges(
+        collapse_bins(
+            joined, [_LID], self.df.columns,
             F.sum(F.when(F.col("__matched__"), 1).otherwise(0)).alias(count_col),
         )
-        .select(
-            *[F.col("__p__").getField(c).alias(c) for c in self.df.columns],
-            F.col(count_col),
-        )
     )
-    return GenomicRanges(out)

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from pyranges_1_x_spark import names as nm
 from pyranges_1_x_spark.core import GenomicRanges
-from pyranges_1_x_spark.plans.interval_join import binned_join, rename_keys, top1_overlap
+from pyranges_1_x_spark.plans.interval_join import binned_join, top1_overlap
 from pyranges_1_x_spark.plans.islands import island_agg
 
 _LID = "__ij_lid__"
@@ -42,7 +42,7 @@ def subtract_overlaps(
     """
     odf, keys = self._binary_prepared(other, strand_behavior, match_by)
     bin_size = self.resolve_bin(bin_size)
-    blockers, bkeys = rename_keys(
+    blockers = (
         island_agg(
             odf.select(*keys, nm.START_COL, nm.END_COL), keys, bucket_width=bin_size * 16,
         )
@@ -53,14 +53,12 @@ def subtract_overlaps(
         # self row at p into two touching residuals. Subtracting the empty
         # set must be the identity, so drop them before the join
         # (tests/test_property_based.py pins this).
-        .filter(F.col("__be__") > F.col("__bs__")),
-        keys,
+        .filter(F.col("__be__") > F.col("__bs__"))
     )
     joined = binned_join(
         self.df,
         blockers,
         keys=keys,
-        right_keys=bkeys,
         how="left",
         bin_size=bin_size,
         rstart="__bs__",
@@ -259,14 +257,13 @@ def set_intersect_overlaps(
     bin_size = self.resolve_bin(bin_size)
     cols = [*keys, nm.START_COL, nm.END_COL]
     a = island_agg(self.df.select(*cols), keys, bucket_width=bin_size * 16)
-    b, bkeys = rename_keys(
+    b = (
         island_agg(odf.select(*cols), keys, bucket_width=bin_size * 16)
         .withColumnRenamed(nm.START_COL, "__bs__")
-        .withColumnRenamed(nm.END_COL, "__be__"),
-        keys,
+        .withColumnRenamed(nm.END_COL, "__be__")
     )
     pairs = binned_join(
-        a, b, keys=keys, right_keys=bkeys, how="inner", bin_size=bin_size,
+        a, b, keys=keys, how="inner", bin_size=bin_size,
         rstart="__bs__", rend="__be__",
     )
     if multiple != nm.OVERLAP_ALL:

@@ -25,6 +25,11 @@ qualifies only in the bin containing ``max(start_l, start_r)``. This:
 * costs an explode factor of ``len/bin + 1`` per row (~1 for genomic intervals
   with the default 100kb bin).
 
+Two pieces carry every variant: ``bin_sides`` bins both inputs and
+builds the join condition (it also renames the right keys, so callers pass
+``keys`` only), and ``collapse_bins`` folds a left row's bin-copies back to
+one row (semi/anti probes, outer joins' unmatched rows, ``count_overlaps``).
+
 Generated-id discipline (correctness posture)
 ---------------------------------------------
 ``monotonically_increasing_id`` is nondeterministic across separate evaluations
@@ -56,10 +61,21 @@ from pyranges_1_x_spark.names import (
     VALID_OVERLAP_MODES,
 )
 
-__all__ = ["interval_join", "binned_join", "binned_exists", "rename_keys", "floordiv"]
+__all__ = [
+    "interval_join",
+    "binned_join",
+    "binned_exists",
+    "bin_sides",
+    "collapse_bins",
+    "bin_range",
+    "floordiv",
+    "top1_overlap",
+]
 
 _LBIN, _RBIN = "__lbin__", "__rbin__"
 _LID, _RID = "__ij_lid__", "__ij_rid__"
+# Below floordiv(c, w) for every long c once w >= 2: no interval's bin.
+_NO_BIN = -(2**63)
 
 
 def floordiv(c: Column, w: int) -> Column:
@@ -72,26 +88,13 @@ def floordiv(c: Column, w: int) -> Column:
     return F.call_function("div", c - F.pmod(c, F.lit(w)), F.lit(w).cast("long"))
 
 
-def _explode_bins(df: DataFrame, start: str, end: str, bin_size: int, bin_col: str) -> DataFrame:
-    """Explode each interval to the bins it touches: ``[floor(s/W), floor((e-1)/W)]``.
-
-    Empty intervals (End <= Start) land in their start bin only (``greatest``
-    guards Spark's descending-``sequence`` behavior)."""
-    lo = floordiv(F.col(start), bin_size)
-    hi = F.greatest(lo, floordiv(F.col(end) - 1, bin_size))
-    return df.withColumn(bin_col, F.explode(F.sequence(lo, hi)))
-
-
-def rename_keys(right: DataFrame, keys: list[str], prefix: str = "__rk") -> tuple[DataFrame, list[str]]:
-    """Rename the right frame's key columns to internal names so left/right
-    column sets stay disjoint through the join."""
-    rkeys = []
-    out = right
-    for i, k in enumerate(keys):
-        rk = f"{prefix}{i}__"
-        out = out.withColumnRenamed(k, rk)
-        rkeys.append(rk)
-    return out, rkeys
+def bin_range(start: Column, end: Column, bin_size: int) -> tuple[Column, Column]:
+    """First and last bin ``[floor(s/W), floor((e-1)/W)]`` that ``[start, end)``
+    touches, for ``F.sequence``. Empty intervals (End <= Start) get their
+    start bin only (``greatest`` guards Spark's descending ``sequence``); a
+    NULL End also gives the start bin, a NULL Start NULL bounds."""
+    lo = floordiv(start, bin_size)
+    return lo, F.greatest(lo, floordiv(end - 1, bin_size))
 
 
 def _split_payload(fields):
@@ -154,25 +157,125 @@ def _split_payload(fields):
     return True, key_fields, first_fields
 
 
+def _bins(lo: Column, hi: Column) -> Column:
+    """The bins ``[lo, hi]``, or for NULL bounds (where ``sequence`` is NULL
+    and ``explode`` would drop the row) the one bin ``_NO_BIN``. The row's
+    overlap predicate is NULL, so it matches nothing in any bin; a bin that
+    no interval reaches keeps the hash join from probing partners for it,
+    and a non-NULL bin keeps the bin column non-nullable, so joins infer no
+    IS NOT NULL filter above the explode."""
+    return F.coalesce(F.sequence(lo, hi), F.array(F.lit(_NO_BIN)))
+
+
+def bin_sides(
+    left: DataFrame,
+    right: DataFrame,
+    keys: list[str],
+    *,
+    bin_size: int,
+    rstart: str,
+    rend: str,
+    ids: bool,
+    slack: int = 0,
+    contained: bool = False,
+) -> tuple[DataFrame, DataFrame, Column, Column]:
+    """The one bin-and-condition builder behind every binned overlap test.
+
+    Widens the left intervals (``Start``/``End``) by ``slack`` into
+    ``__ws__``/``__we__``,
+    explodes both sides to the bins they touch (``__lbin__``/``__rbin__``;
+    the left side also carries its bin count ``__nbins__``), renames the
+    right key columns to internal names so the two column sets stay
+    disjoint, and builds the join condition: same bin, equal keys,
+    overlapping (widened) intervals and, with ``contained``, the unwidened
+    left interval inside the right one.
+
+    A row with a NULL bin range (NULL Start) keeps ONE bin-copy (``_bins``,
+    ``__nbins__`` = 1), as a row with a NULL End or a NULL key already does:
+    it matches nothing, so left/outer joins, counts and anti probes report
+    it unmatched (SQL LEFT JOIN / NOT EXISTS semantics) instead of dropping
+    it.
+
+    ``ids`` tags every input row with ``__ij_lid__`` / ``__ij_rid__``
+    (``monotonically_increasing_id``) before the explode, so a row's
+    bin-copies share its id; streaming callers leave it off, as streaming
+    plans forbid those ids. The right id comes after the key rename: a
+    projection above the id one cannot collapse into it, and would keep
+    the right side's null filters from reaching the scan.
+
+    Returns ``(lb, rb, cond, once)`` where ``once`` is the emit-once term
+    that pair-emitting joins AND into ``cond``: a pair qualifies only in the
+    bin of ``max(widened-left-start, right-start)``."""
+    rkeys = [f"__rk{i}__" for i in range(len(keys))]
+    right = right.withColumnsRenamed(dict(zip(keys, rkeys)))
+    if ids:
+        left = left.withColumn(_LID, F.monotonically_increasing_id())
+        right = right.withColumn(_RID, F.monotonically_increasing_id())
+    ws, we = F.col("__ws__"), F.col("__we__")
+    if slack:
+        lb = left.withColumn("__ws__", F.col(START_COL) - F.lit(slack)).withColumn(
+            "__we__", F.col(END_COL) + F.lit(slack)
+        )
+    else:
+        lb = left.withColumn("__ws__", F.col(START_COL)).withColumn("__we__", F.col(END_COL))
+    lo, hi = bin_range(ws, we, bin_size)
+    lb = lb.withColumn("__nbins__", F.coalesce(hi - lo + 1, F.lit(1))).withColumn(
+        _LBIN, F.explode(_bins(lo, hi))
+    )
+    rb = right.withColumn(
+        _RBIN, F.explode(_bins(*bin_range(F.col(rstart), F.col(rend), bin_size)))
+    )
+
+    cond = F.col(_LBIN) == F.col(_RBIN)
+    for k, rk in zip(keys, rkeys):
+        cond = cond & (F.col(k) == F.col(rk))
+    cond = cond & (ws < F.col(rend)) & (F.col(rstart) < we)
+    if contained:
+        cond = cond & (F.col(START_COL) >= F.col(rstart)) & (F.col(END_COL) <= F.col(rend))
+    once = F.col(_LBIN) == floordiv(F.greatest(ws, F.col(rstart)), bin_size)
+    return lb, rb, cond, once
+
+
+def collapse_bins(df: DataFrame, by: list[str], fields: list[str], *aggs: Column) -> DataFrame:
+    """Collapse the bin-copies of each ``by`` row id to one row: the payload
+    columns ``fields`` (equal on every copy), then the ``aggs`` over the
+    copies. The one bin-copy collapse behind the semi/anti probes, the
+    outer joins' unmatched rows and ``count_overlaps``.
+
+    Groupable payloads (see ``_split_payload``) ride in the GROUP BY key
+    next to ``by``, top-level floats as ``first()`` aggregates: a
+    map-side-combining HashAggregate. Anything else rides in
+    ``any_value(struct)``, which plans a SortAggregate but keeps every bit."""
+    groupable, key_fields, first_fields = _split_payload([df.schema[c] for c in fields])
+    if groupable:
+        group = [*by, *(f.name for f in key_fields)]
+        firsts = [F.first(f.name).alias(f.name) for f in first_fields]
+        if aggs or firsts:
+            out = df.groupBy(*group).agg(*aggs, *firsts)
+        else:
+            out = df.select(*group).distinct()
+        return out.select(*fields, *out.columns[len(group) : len(group) + len(aggs)])
+    out = df.groupBy(*by).agg(F.any_value(F.struct(*fields)).alias("__p__"), *aggs)
+    return out.select(
+        *[F.col("__p__").getField(c).alias(c) for c in fields], *out.columns[len(by) + 1 :]
+    )
+
+
 def binned_exists(
     left: DataFrame,
     right: DataFrame,
     *,
     keys: list[str],
-    right_keys: list[str],
     anti: bool = False,
     slack: int = 0,
     contained: bool = False,
     bin_size: int = DEFAULT_BIN_SIZE,
-    lstart: str = START_COL,
-    lend: str = END_COL,
     rstart: str = START_COL,
     rend: str = END_COL,
-    broadcast_right: bool = False,
 ) -> DataFrame:
     """EXISTS / NOT-EXISTS overlap test that never materializes the pair
     relation — the scale path for ``overlap`` (semi) and
-    ``complement_overlaps`` (anti).
+    ``complement_overlaps`` (anti). Returns the qualifying left rows.
 
     A left join + any-flag aggregate (the r1-r3 plan) builds ``|pairs|``
     intermediate rows before reducing; at 100 TB the pair relation can dwarf
@@ -190,85 +293,20 @@ def binned_exists(
     The emit-once predicate is deliberately absent: it exists to count each
     PAIR once, while here a pair must count in EVERY shared bin (anti
     correctness) and semi deduplicates by row id anyway.
-
-    Returns the left columns plus a boolean ``__any__`` column that is
-    True (semi) / False (anti) on every row — kept so callers can filter
-    uniformly with the aggregate form.
     """
-    lb = left.withColumn(_LID, F.monotonically_increasing_id())
-    if slack:
-        lb = (
-            lb.withColumn("__ws__", F.col(lstart) - F.lit(slack))
-            .withColumn("__we__", F.col(lend) + F.lit(slack))
-        )
-    else:
-        lb = lb.withColumn("__ws__", F.col(lstart)).withColumn("__we__", F.col(lend))
-    lo = floordiv(F.col("__ws__"), bin_size)
-    hi = F.greatest(lo, floordiv(F.col("__we__") - 1, bin_size))
-    lb = lb.withColumn("__nbins__", hi - lo + 1).withColumn(
-        _LBIN, F.explode(F.sequence(lo, hi))
+    lb, rb, cond, _ = bin_sides(
+        left, right, keys, slack=slack, contained=contained, bin_size=bin_size,
+        rstart=rstart, rend=rend, ids=True,
     )
-    rb = right.withColumn(_RBIN, F.explode(F.sequence(
-        floordiv(F.col(rstart), bin_size),
-        F.greatest(floordiv(F.col(rstart), bin_size), floordiv(F.col(rend) - 1, bin_size)),
-    )))
-    if broadcast_right:
-        rb = F.broadcast(rb)
-
-    cond = F.col(_LBIN) == F.col(_RBIN)
-    for k, rk in zip(keys, right_keys):
-        cond = cond & (F.col(k) == F.col(rk))
-    cond = cond & (F.col("__ws__") < F.col(rend)) & (F.col(rstart) < F.col("__we__"))
-    if contained:
-        cond = cond & (F.col(lstart) >= F.col(rstart)) & (F.col(lend) <= F.col(rend))
-
-    groupable, key_fields, first_fields = _split_payload(left.schema.fields)
-    if groupable:
-        # Payload rides in the GROUP BY key (see _split_payload): a
-        # HashAggregate with map-side combine, no SortAggregate sorts.
-        # _LID stays in the key so duplicate left rows keep their
-        # multiplicity; top-level float payload columns ride as first()
-        # aggregates to preserve -0.0/NaN bits (VERDICT r15 #5).
-        key_names = [f.name for f in key_fields]
-        first_aggs = [F.first(f.name).alias(f.name) for f in first_fields]
-        if not anti:
-            sel = lb.join(rb, cond, "left_semi")
-            if first_aggs:
-                collapsed = sel.groupBy(_LID, *key_names).agg(*first_aggs)
-            else:
-                collapsed = sel.select(_LID, *key_names).distinct()
-            return collapsed.select(*left.columns, F.lit(True).alias("__any__"))
-        return (
-            lb.join(rb, cond, "left_anti")
-            .groupBy(_LID, "__nbins__", *key_names)
-            .agg(F.count(F.lit(1)).alias("__c__"), *first_aggs)
-            .filter(F.col("__c__") == F.col("__nbins__"))
-            .select(*left.columns, F.lit(False).alias("__any__"))
-        )
-    payload = F.struct(*[F.col(c) for c in left.columns])
     if not anti:
-        return (
-            lb.join(rb, cond, "left_semi")
-            .groupBy(_LID)
-            .agg(F.any_value(payload).alias("__p__"))
-            .select(
-                *[F.col("__p__").getField(c).alias(c) for c in left.columns],
-                F.lit(True).alias("__any__"),
-            )
-        )
+        return collapse_bins(lb.join(rb, cond, "left_semi"), [_LID], left.columns)
     return (
-        lb.join(rb, cond, "left_anti")
-        .groupBy(_LID)
-        .agg(
-            F.any_value(payload).alias("__p__"),
+        collapse_bins(
+            lb.join(rb, cond, "left_anti"), [_LID], ["__nbins__", *left.columns],
             F.count(F.lit(1)).alias("__c__"),
-            F.any_value(F.col("__nbins__")).alias("__nb__"),
         )
-        .filter(F.col("__c__") == F.col("__nb__"))
-        .select(
-            *[F.col("__p__").getField(c).alias(c) for c in left.columns],
-            F.lit(False).alias("__any__"),
-        )
+        .filter(F.col("__c__") == F.col("__nbins__"))
+        .select(*left.columns)
     )
 
 
@@ -277,20 +315,18 @@ def binned_join(
     right: DataFrame,
     *,
     keys: list[str],
-    right_keys: list[str],
     how: str = "inner",
     slack: int = 0,
     contained: bool = False,
     bin_size: int = DEFAULT_BIN_SIZE,
-    lstart: str = START_COL,
-    lend: str = END_COL,
     rstart: str = START_COL,
     rend: str = END_COL,
-    broadcast_right: bool = False,
     keep_unmatched_bins: bool = False,
 ) -> DataFrame:
-    """The one shared binned interval join. Column contract: left/right names
-    must be disjoint (use ``rename_keys``).
+    """The one shared binned interval join, on equal ``keys`` (present on
+    both sides under the same names) and overlapping intervals (left
+    ``Start``/``End``, right ``rstart``/``rend``). Column contract: apart
+    from the keys, left/right names must be disjoint.
 
     how='inner': one output row per matching pair (emit-once in the condition).
     how='left' : additionally one null-padded row per matchless left row.
@@ -313,112 +349,56 @@ def binned_join(
     """
     if how not in VALID_JOIN_TYPES:
         raise ValueError(f"how must be one of {VALID_JOIN_TYPES}, got {how!r}")
-    dup = set(left.columns) & set(right.columns)
+    if keep_unmatched_bins and how != "left":
+        raise ValueError("keep_unmatched_bins only applies to how='left'")
+    right_vals = [f for f in right.schema.fields if f.name not in keys]
+    dup = set(left.columns) & {f.name for f in right_vals}
     if dup:
         raise ValueError(f"left/right column names must be disjoint; shared: {sorted(dup)}")
 
-    lb = left.withColumn(_LID, F.monotonically_increasing_id())
-    if slack:
-        lb = (
-            lb.withColumn("__ws__", F.col(lstart) - F.lit(slack))
-            .withColumn("__we__", F.col(lend) + F.lit(slack))
-        )
-    else:
-        lb = lb.withColumn("__ws__", F.col(lstart)).withColumn("__we__", F.col(lend))
-    lb = _explode_bins(lb, "__ws__", "__we__", bin_size, _LBIN)
-    rb = right.withColumn(_RID, F.monotonically_increasing_id())
-    rb = _explode_bins(rb, rstart, rend, bin_size, _RBIN)
-    if broadcast_right:
-        rb = F.broadcast(rb)
-
-    ws, we = F.col("__ws__"), F.col("__we__")
-    ls, le = F.col(lstart), F.col(lend)
-    rs, re_ = F.col(rstart), F.col(rend)
-
-    cond = F.col(_LBIN) == F.col(_RBIN)
-    for k, rk in zip(keys, right_keys):
-        cond = cond & (F.col(k) == F.col(rk))
-    cond = cond & (ws < re_) & (rs < we)
-    if contained:
-        cond = cond & (ls >= rs) & (le <= re_)
-    # Emit-once: the pair qualifies only in the bin of max(widened-left-start, right-start).
-    first_common = F.greatest(ws, rs)
-    cond = cond & (F.col(_LBIN) == floordiv(first_common, bin_size))
-
-    if keep_unmatched_bins:
-        if how != "left":
-            raise ValueError("keep_unmatched_bins only applies to how='left'")
-        joined = lb.join(rb, cond, "left").withColumn("__matched__", F.col(_RID).isNotNull())
-        out_cols_raw = (
-            [F.col(c) for c in left.columns]
-            + [F.col(c) for c in right.columns if c not in right_keys]
-            + [F.col(_LID), F.col(_RID), F.col("__matched__")]
-        )
-        return joined.select(*out_cols_raw)
-
-    right_vals = [f for f in right.schema.fields if f.name not in right_keys]
+    lb, rb, cond, once = bin_sides(
+        left, right, keys, slack=slack, contained=contained, bin_size=bin_size,
+        rstart=rstart, rend=rend, ids=True,
+    )
+    cond = cond & once
     out_names = left.columns + [f.name for f in right_vals] + [_LID, _RID, "__matched__"]
 
-    if how == "inner":
+    if keep_unmatched_bins:
         return (
-            lb.join(rb, cond, "inner").withColumn("__matched__", F.lit(True)).select(*out_names)
+            lb.join(rb, cond, "left")
+            .withColumn("__matched__", F.col(_RID).isNotNull())
+            .select(*out_names)
         )
+
+    pairs = lb.join(rb, cond, "inner").withColumn("__matched__", F.lit(True)).select(*out_names)
+    if how == "inner":
+        return pairs
 
     # Outer variants, two passes over the same binned-join shape: an INNER
     # join emits the pairs, and a slim per-row-id hash aggregate over a left
     # join of the same condition finds the matchless outer rows (any-flag =
-    # max(partner-id IS NOT NULL); payload rides in any_value(struct), so the
-    # map-side combine collapses bin copies BEFORE the shuffle). The union is
-    # content-based: generated row ids are only ever grouped within a single
-    # plan-branch evaluation and never compared across branches. r3 derived
-    # the anti rows from ONE join with a per-id row_number window instead —
-    # the whole pair relation shuffled unreduced and sorted, measured slower
-    # at every scale where pairs dwarf inputs (join_left 11.2s vs 7.98s two-
-    # pass at sf0.1, VERDICT r3 #4); re-scanning the inputs is the cheaper
-    # side of that trade.
+    # max(partner-id IS NOT NULL); the bin copies collapse map-side in
+    # collapse_bins, BEFORE the shuffle). The union is content-based:
+    # generated row ids are only ever grouped within a single plan-branch
+    # evaluation and never compared across branches. r3 derived the anti
+    # rows from ONE join with a per-id row_number window instead — the whole
+    # pair relation shuffled unreduced and sorted, measured slower at every
+    # scale where pairs dwarf inputs (join_left 11.2s vs 7.98s two-pass at
+    # sf0.1, VERDICT r3 #4); re-scanning the inputs is the cheaper side of
+    # that trade.
     null_id = F.lit(None).cast("long")
-
-    def _pairs() -> DataFrame:
-        return (
-            lb.join(rb, cond, "inner").withColumn("__matched__", F.lit(True)).select(*out_names)
-        )
 
     def _anti(gid: str) -> DataFrame:
         flipped = gid == _RID
         pay_fields = right_vals if flipped else list(left.schema.fields)
         pad_fields = list(left.schema.fields) if flipped else right_vals
         partner = _LID if flipped else _RID
-        joined = (rb.join(lb, cond, "left") if flipped else lb.join(rb, cond, "left"))
+        joined = rb.join(lb, cond, "left") if flipped else lb.join(rb, cond, "left")
+        kept = [F.col(f.name) for f in pay_fields]
         padded = [F.lit(None).cast(f.dataType).alias(f.name) for f in pad_fields]
-        groupable, key_fields, first_fields = _split_payload(pay_fields)
-        if groupable:
-            # Payload in the GROUP BY key (see _split_payload): the bin-copy
-            # collapse stays a map-side-combining HashAggregate instead of
-            # a SortAggregate over the bin-exploded relation; top-level
-            # float payload columns ride as first() aggregates to preserve
-            # -0.0/NaN bits (VERDICT r15 #5).
-            kept = [F.col(f.name) for f in pay_fields]
-            return (
-                joined.groupBy(gid, *[f.name for f in key_fields])
-                .agg(
-                    F.max(F.col(partner).isNotNull()).alias("__any__"),
-                    *[F.first(f.name).alias(f.name) for f in first_fields],
-                )
-                .filter(~F.col("__any__"))
-                .select(
-                    *(padded + kept if flipped else kept + padded),
-                    null_id.alias(_LID),
-                    null_id.alias(_RID),
-                    F.lit(False).alias("__matched__"),
-                )
-                .select(*out_names)
-            )
-        pay = F.struct(*[F.col(f.name) for f in pay_fields])
-        kept = [F.col("__p__").getField(f.name).alias(f.name) for f in pay_fields]
         return (
-            joined.groupBy(gid)
-            .agg(
-                F.any_value(pay).alias("__p__"),
+            collapse_bins(
+                joined, [gid], [f.name for f in pay_fields],
                 F.max(F.col(partner).isNotNull()).alias("__any__"),
             )
             .filter(~F.col("__any__"))
@@ -432,10 +412,10 @@ def binned_join(
         )
 
     if how == "left":
-        return _pairs().unionByName(_anti(_LID))
+        return pairs.unionByName(_anti(_LID))
     if how == "right":
-        return _pairs().unionByName(_anti(_RID))
-    return _pairs().unionByName(_anti(_LID)).unionByName(_anti(_RID))
+        return pairs.unionByName(_anti(_RID))
+    return pairs.unionByName(_anti(_LID)).unionByName(_anti(_RID))
 
 
 def top1_overlap(
@@ -493,14 +473,15 @@ def interval_join(
     suffix: str = JOIN_SUFFIX,
     report_overlap_column: str | None = None,
     bin_size: int = DEFAULT_BIN_SIZE,
-    broadcast_right: bool = False,
 ) -> DataFrame:
     """Full `join_overlaps` surface over ``binned_join``.
 
     Parameters mirror ``RangeFrame.join_overlaps`` (reference range_frame.py:315-395):
     ``how`` in {inner,left,right,outer}; ``multiple`` in {all,first,last} where
-    'first' keeps the match with the smallest right Start and 'last' the biggest
-    right End (reference range_frame.py:558-562); non-matching rows are
+    'first' keeps the lexicographically first right ``(Start, End)`` match
+    and 'last' the lexicographically last one (see ``top1_overlap`` for why
+    this follows the reference doctest, not its "biggest End" docstring,
+    range_frame.py:558-562); non-matching rows are
     null-padded — including the key columns of right-only rows, as in the
     reference's outer doctest (right-only rows show Chromosome nan).
 
@@ -510,11 +491,9 @@ def interval_join(
     if multiple not in VALID_OVERLAP_MODES:
         raise ValueError(f"multiple must be one of {VALID_OVERLAP_MODES}, got {multiple!r}")
 
-    right_sfx, rkeys = rename_keys(right, keys)
+    right_sfx = right
     for c in right.columns:
-        if c in keys:
-            continue
-        if c in (START_COL, END_COL) or c in left.columns:
+        if c not in keys and (c in (START_COL, END_COL) or c in left.columns):
             right_sfx = right_sfx.withColumnRenamed(c, c + suffix)
     rstart, rend = START_COL + suffix, END_COL + suffix
 
@@ -522,14 +501,12 @@ def interval_join(
         left,
         right_sfx,
         keys=keys,
-        right_keys=rkeys,
         how=how,
         slack=slack,
         contained=contained,
         bin_size=bin_size,
         rstart=rstart,
         rend=rend,
-        broadcast_right=broadcast_right,
     )
 
     if multiple != OVERLAP_ALL:

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from pyranges_1_x_spark import names as nm
 from pyranges_1_x_spark.core import GenomicRanges
-from pyranges_1_x_spark.plans.interval_join import _explode_bins, floordiv, rename_keys
+from pyranges_1_x_spark.plans.interval_join import bin_range, bin_sides
 
 
 def annotate_stream(
@@ -37,7 +37,7 @@ def annotate_stream(
     a static annotation frame; output = stream columns + suffixed annotation
     columns, one row per overlapping pair.
 
-    Built directly on the binning primitives (not ``interval_join``) because
+    Built on the planner's bin builder (not ``interval_join``) because
     streaming plans forbid ``monotonically_increasing_id`` — and a stateless
     pair-emitting join needs no row identity anyway."""
     keys = keys or [nm.CHROM_COL]
@@ -45,25 +45,13 @@ def annotate_stream(
     for c in right.columns:
         if c not in keys and (c in (nm.START_COL, nm.END_COL) or c in stream.columns):
             right = right.withColumnRenamed(c, c + suffix)
-    right, rkeys = rename_keys(right, keys)
-    rstart, rend = nm.START_COL + suffix, nm.END_COL + suffix
 
-    lb = _explode_bins(stream, nm.START_COL, nm.END_COL, bin_size, "__lbin__")
-    rb = F.broadcast(_explode_bins(right, rstart, rend, bin_size, "__rbin__"))
-
-    cond = F.col("__lbin__") == F.col("__rbin__")
-    for k, rk in zip(keys, rkeys):
-        cond = cond & (F.col(k) == F.col(rk))
-    ls, le = F.col(nm.START_COL), F.col(nm.END_COL)
-    rs, re_ = F.col(rstart), F.col(rend)
-    cond = cond & (ls < re_) & (rs < le)
-    # emit-once: the pair qualifies only in the bin containing max(ls, rs)
-    cond = cond & (F.col("__lbin__") == floordiv(F.greatest(ls, rs), bin_size))
-
-    out_cols = [F.col(c) for c in stream.columns] + [
-        F.col(c) for c in right.columns if c not in rkeys
-    ]
-    return lb.join(rb, cond, "inner").select(*out_cols)
+    lb, rb, cond, once = bin_sides(
+        stream, right, keys, bin_size=bin_size,
+        rstart=nm.START_COL + suffix, rend=nm.END_COL + suffix, ids=False,
+    )
+    out_cols = stream.columns + [c for c in right.columns if c not in keys]
+    return lb.join(F.broadcast(rb), cond & once, "inner").select(*out_cols)
 
 
 def windowed_interval_coverage(
@@ -79,13 +67,10 @@ def windowed_interval_coverage(
     d = events
     if d.isStreaming:
         d = d.withWatermark(ts_col, watermark)
-    # exact integer floordiv (r14 review find: the float division this
-    # re-implemented loses precision above 2^53 — the precise hole
-    # plans/interval_join.floordiv exists to close; annotate_stream eight
-    # lines down already used it)
-    lo = floordiv(F.col(nm.START_COL), bin_size)
-    hi = F.greatest(lo, floordiv(F.col(nm.END_COL) - 1, bin_size))
-    binned = d.withColumn("__bin__", F.explode(F.sequence(lo, hi)))
+    # integer-exact bins (a float division loses precision above 2^53); a
+    # NULL Start touches no bin
+    bins = F.sequence(*bin_range(F.col(nm.START_COL), F.col(nm.END_COL), bin_size))
+    binned = d.withColumn("__bin__", F.explode(bins))
     return (
         binned.groupBy(
             F.window(F.col(ts_col), window_duration).alias("w"),

@@ -199,18 +199,18 @@ def test_overlap_multiple_and_invert(spark):
     assert g1k.copy().resolve_bin(None) == 1000
 
 
-def test_float_payload_bits_survive_bin_collapse(spark):
+def test_float_payload_bits_survive_bin_collapse(spark, monkeypatch):
     """VERDICT r15 #5: Spark's NormalizeFloatingNumbers rewrites -0.0 -> 0.0
     in grouping keys, so a float Score payload riding in the bin-collapse
     GROUP BY key would round-trip -0.0 as 0.0 where the struct-aggregate
-    fallback preserved the sign bit. _split_payload routes top-level floats
-    through scalar first() aggregates instead — byte-compare both paths
-    through binned_join (left, via join_overlaps), binned_exists (via
-    overlap invert) and count_overlaps."""
+    fallback preserved the sign bit. collapse_bins routes top-level floats
+    through scalar first() aggregates instead — byte-compare that path with
+    the struct fallback for every collapse client: the semi and anti
+    probes, the left join, the right-side unmatched rows of an outer join
+    and count_overlaps."""
     import math
     import struct as _struct
 
-    import pyranges_1_x_spark.operators.overlap as ovmod
     import pyranges_1_x_spark.plans.interval_join as ijmod
 
     cols = ("Chromosome", "Start", "End", "Score")
@@ -222,33 +222,84 @@ def test_float_payload_bits_survive_bin_collapse(spark):
     b = gr(spark, [("chr1", 4, 6), ("chr1", 300, 310)])
 
     def bits(x):
-        return _struct.pack(">d", x).hex()
+        return _struct.pack(">d", x).hex() if isinstance(x, float) else x
 
     def snap():
-        out = {}
-        out["join_left"] = a.join_overlaps(b, join_type="left").df
-        out["anti"] = a.overlap(b, invert=True).df
-        out["count"] = a.count_overlaps(b).df
+        out = {
+            "semi": a.overlap(b).df,
+            "anti": a.overlap(b, invert=True).df,
+            "join_left": a.join_overlaps(b, join_type="left").df,
+            "outer_right": b.join_overlaps(a, join_type="outer").df,
+            "count": a.count_overlaps(b).df,
+        }
         return {
-            k: sorted(
-                (r.Chromosome, r.Start, r.End, bits(r.Score)) for r in v.collect()
-            )
+            k: sorted(repr(tuple(bits(x) for x in r)) for r in v.collect())
             for k, v in out.items()
         }
 
     fast = snap()
     # Force the struct fallback (the bit-exact reference path) and re-snap.
-    real_ij, real_ov = ijmod._split_payload, ovmod._split_payload
-    ijmod._split_payload = lambda fields: (False, [], [])
-    ovmod._split_payload = ijmod._split_payload
-    try:
-        slow = snap()
-    finally:
-        ijmod._split_payload = real_ij
-        ovmod._split_payload = real_ov
+    monkeypatch.setattr(ijmod, "_split_payload", lambda fields: (False, [], []))
+    slow = snap()
 
     assert fast == slow
     # And the sign bit really is preserved (not both-normalized).
-    neg_zero = bits(-0.0)
-    assert any(t[3] == neg_zero for t in fast["join_left"])
-    assert any(math.isnan(_struct.unpack(">d", bytes.fromhex(t[3]))[0]) for t in fast["count"])
+    neg_zero, nan = repr(bits(-0.0)), repr(bits(math.nan))
+    assert any(neg_zero in t for t in fast["semi"])
+    assert any(neg_zero in t for t in fast["join_left"])
+    assert any(nan in t for t in fast["anti"])
+    assert any(nan in t for t in fast["outer_right"])
+    assert any(nan in t for t in fast["count"])
+
+
+def test_bin_collapse_plans_hash_aggregate(spark):
+    """The groupable bin-copy collapse (_split_payload: payload in the GROUP
+    BY key, top-level floats as first()) must plan a HashAggregate. A
+    SortAggregate — two full sorts of the bin-exploded relation — is the
+    r15 regression that routing exists to prevent."""
+    a = GenomicRanges(spark.createDataFrame(
+        [("chr1", 5, 20, 7, "x", 1.5), ("chr1", 100, 110, 8, "y", -0.0)],
+        "Chromosome string, Start long, End long, n long, s string, d double",
+    ))
+    b = gr(spark, [("chr1", 4, 6)])
+    clients = {
+        "overlap": a.overlap(b),
+        "overlap_invert": a.overlap(b, invert=True),
+        "join_left": a.join_overlaps(b, join_type="left"),
+        "count_overlaps": a.count_overlaps(b),
+    }
+    for name, g in clients.items():
+        plan = g.df._jdf.queryExecution().executedPlan().toString()
+        assert "HashAggregate" in plan, name
+        assert "SortAggregate" not in plan, name
+
+
+def test_null_start_rows_come_out_unmatched(spark):
+    """A NULL Start gives a row no bin range. It must still reach every
+    operator that keeps left rows, unmatched, as rows with a NULL End or a
+    NULL Chromosome do (SQL LEFT JOIN / NOT EXISTS semantics); explode used
+    to drop it. subtract_overlaps leaves no residual for it."""
+    a = GenomicRanges(spark.createDataFrame(
+        [("chr1", 5, 20, 1), ("chr1", None, 20, 2), ("chr1", 5, None, 3),
+         (None, 5, 20, 4), ("chr1", 500, 520, 5)],
+        "Chromosome string, Start long, End long, id long",
+    ))
+    b = gr(spark, [("chr1", 4, 6)])
+
+    def ids(g):
+        return sorted(r.id for r in g.df.collect())
+
+    assert ids(a.join_overlaps(b, join_type="left")) == [1, 2, 3, 4, 5]
+    outer = a.join_overlaps(b, join_type="outer").df.collect()
+    assert sorted((r.id, r.Start_b) for r in outer) == [
+        (1, 4), (2, None), (3, None), (4, None), (5, None)]
+    # the right side's unmatched rows of an outer join keep it too
+    assert ids(b.join_overlaps(a, join_type="outer")) == [1, 2, 3, 4, 5]
+    counts = a.count_overlaps(b).df.collect()
+    assert sorted((r.id, r.Count) for r in counts) == [(1, 1), (2, 0), (3, 0), (4, 0), (5, 0)]
+    assert ids(a.overlap(b, invert=True)) == [2, 3, 4, 5]
+    assert ids(a.complement_overlaps(b)) == [2, 3, 4, 5]
+    assert ids(a.overlap(b)) == [1]
+    residual = {(r.id, r.Start, r.End) for r in a.subtract_overlaps(b).df.collect()}
+    assert {(1, 6, 20), (5, 500, 520)} <= residual
+    assert not {i for i, _, _ in residual} & {2, 3}
