@@ -895,11 +895,14 @@ def repeated_substring_spans(
     union. Bookended-but-not-overlapping spans stay separate (slack=0 —
     distinct repeat regions that merely touch).
 
-    Scale shape: sqrt-chunked gram hashing (O(len^1.5) char scans per doc,
-    the winnow plan), one (id, pos, hash64) exploded relation — 8 bytes a
-    gram, never the gram text — then one of two repeat-membership plans,
-    chosen by ``hot_gram_threshold``, feeding the bucketed island merge.
-    No suffix array, no sort of the corpus text, no all-pairs.
+    Scale shape: one (id, pos, hash64) gram relation — 8 bytes a gram,
+    never the gram text — from ``ml/text.py:gram_hash_rows``: the documents
+    spread over every task slot by id (one text-sized exchange), then
+    sqrt-chunked gram hashing (O(len^1.5) char scans per doc, the winnow
+    chunk rule) as explodes and a projection, so the gram stage compiles
+    and runs on all slots. Then one of two repeat-membership plans, chosen
+    by ``hot_gram_threshold``, feeding the bucketed island merge. No suffix
+    array, no sort of the corpus text, no all-pairs.
 
     ``hot_gram_threshold=None`` (default): a gram-hash-partitioned COUNT
     window fuses frequency counting and the join-back into ONE shuffle
@@ -927,17 +930,11 @@ def repeated_substring_spans(
     """
     from pyspark.sql import Window
 
-    from pyranges_1_x_spark.ml.text import chunked_gram_hashes
+    from pyranges_1_x_spark.ml.text import gram_hash_rows
     from pyranges_1_x_spark.plans.islands import island_agg
 
-    base = df.filter(F.length(F.col(text_col)) >= min_len).select(
-        F.col(id_col), F.col(text_col).alias("__t__")
-    )
-    g = base.select(
-        F.col(id_col),
-        F.posexplode(chunked_gram_hashes(F.col("__t__"), min_len, hash_fn)).alias(
-            "__pos__", "__h__"
-        ),
+    g = gram_hash_rows(
+        df.filter(F.length(F.col(text_col)) >= min_len), id_col, text_col, min_len, hash_fn
     )
     if hot_gram_threshold is None:
         w = Window.partitionBy("__h__")

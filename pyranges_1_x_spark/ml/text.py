@@ -454,35 +454,92 @@ def bow_signature(text: Column) -> Column:
     return F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(tokens(text)))))
 
 
-def chunked_gram_hashes(t: Column, k: int, hash_fn) -> Column:
-    """Array of hashes of every character ``k``-gram of the (materialized)
-    text column ``t``, position-ordered — the sqrt-chunked expression shared
-    by ``winnow_fingerprints`` and ``repeated_substring_spans``. Per-element
+def _gram_chunks(t: Column, k: int) -> tuple[Column, Column]:
+    """The sqrt-chunk rule shared by both gram forms. Per-element
     ``substring(s, pos, n)`` is O(pos) on UTF8String, so hashing grams
     straight off the document is O(len^2) per doc; cutting it into
-    ``ceil(sqrt(n_grams))``-gram-start chunks with a k-1 char overlap keeps
-    boundary-spanning grams intact at O(len^1.5) total char scans. Each
-    chunk is a bound, materialized lambda variable (higher-order functions
-    get no CSE — the r8/r10 lesson; ``t`` itself must be a column
-    reference, not an inlined expression). Sub-k documents emit one hash of
-    the whole (short) text at position 0."""
+    ``c = ceil(sqrt(n_grams))``-gram-start chunks keeps the total char scans
+    at O(len^1.5). Returns ``(c, chunk indices 0..n_chunks-1)``. A text
+    shorter than ``k`` (or NULL) counts one gram, so it yields one chunk."""
     n_grams = F.greatest(F.length(t) - k + 1, F.lit(1))
     c = F.greatest(F.ceil(F.sqrt(n_grams)).cast("int"), F.lit(1))
     n_chunks = F.ceil(n_grams / c).cast("int")
-    chunk_idx = F.sequence(F.lit(0), F.greatest(n_chunks - 1, F.lit(0)))
-    chunks = F.transform(chunk_idx, lambda j: F.substring(t, j * c + 1, c + k - 1))
+    return c, F.sequence(F.lit(0), F.greatest(n_chunks - 1, F.lit(0)))
+
+
+def _chunk_text(t: Column, j: Column, c: Column, k: int) -> Column:
+    """Chunk ``j``: its ``c`` gram starts plus the k-1 chars that finish the
+    last gram (the last chunk's substring is truncated to just cover its own
+    gram starts)."""
+    return F.substring(t, j * c + 1, c + k - 1)
+
+
+def _chunk_gram_starts(ch: Column, k: int) -> Column:
+    """0-based gram starts in chunk ``ch``: length(ch)-k+1 of them, exact for
+    every chunk; greatest(..,1) gives a sub-k text its one position-0 gram
+    of the whole (short) text."""
+    return F.sequence(F.lit(0), F.greatest(F.length(ch) - k + 1, F.lit(1)) - 1)
+
+
+def chunked_gram_hashes(t: Column, k: int, hash_fn) -> Column:
+    """Array of hashes of every character ``k``-gram of the (materialized)
+    text column ``t``, position-ordered — the array form, for
+    ``winnow_fingerprints``, whose window minimum reads the hashes of one
+    document as one array. Sqrt-chunked (``_gram_chunks``). Each chunk is a
+    bound, materialized lambda variable (higher-order functions get no CSE —
+    the r8/r10 lesson; ``t`` itself must be a column reference, not an
+    inlined expression).
+
+    The lambdas make this form CodegenFallback (interpreted, boxed). A
+    consumer that wants one row per gram uses ``gram_hash_rows`` instead:
+    the same (position, hash) pairs from explodes and a plain projection,
+    which compile."""
+    c, chunk_idx = _gram_chunks(t, k)
+    chunks = F.transform(chunk_idx, lambda j: _chunk_text(t, j, c, k))
 
     def _chunk_hashes(ch: Column) -> Column:
-        # Grams starting in this chunk: length(ch)-k+1 — exact for every
-        # chunk (the last chunk's substring is truncated to just cover its
-        # own gram starts). greatest(..,1) reproduces the whole-document
-        # plan's position-0 hash for sub-k documents (t shorter than k).
-        ng = F.greatest(F.length(ch) - k + 1, F.lit(1))
         return F.transform(
-            F.sequence(F.lit(0), ng - 1), lambda i: hash_fn(F.substring(ch, i + 1, k))
+            _chunk_gram_starts(ch, k), lambda i: hash_fn(F.substring(ch, i + 1, k))
         )
 
     return F.flatten(F.transform(chunks, _chunk_hashes))
+
+
+def gram_hash_rows(
+    df: DataFrame, id_col: str, text_col: str, k: int, hash_fn
+) -> DataFrame:
+    """One ``(id_col, __pos__, __h__)`` row per character ``k``-gram of
+    ``text_col``: the row form of ``posexplode(chunked_gram_hashes(...))``,
+    the same multiset bit for bit (``__pos__`` is the 0-based gram start).
+
+    The documents are first spread over ``defaultParallelism`` partitions
+    by id: a scan of few files reads as one split, which would run the
+    whole gram stage in one task. A user-numbered repartition is exempt
+    from AQE coalescing (the ``shingle_rows`` discipline), and it moves
+    text bytes, not gram rows. Then chunk indices and in-chunk gram starts
+    explode as plain sequences and each gram is hashed in a projection, so
+    the gram stage runs in whole-stage codegen with no lambda."""
+    nparts = df.sparkSession.sparkContext.defaultParallelism
+    t = F.col("__t__")
+    c, chunk_idx = _gram_chunks(t, k)
+    chunks = (
+        df.select(F.col(id_col), F.col(text_col).alias("__t__"))
+        .repartition(nparts, id_col)
+        .select(F.col(id_col), t, c.alias("__c__"), F.explode(chunk_idx).alias("__j__"))
+        .select(
+            F.col(id_col),
+            (F.col("__j__") * F.col("__c__")).alias("__o__"),
+            _chunk_text(t, F.col("__j__"), F.col("__c__"), k).alias("__ch__"),
+        )
+    )
+    ch = F.col("__ch__")
+    return chunks.select(
+        F.col(id_col), F.col("__o__"), ch, F.explode(_chunk_gram_starts(ch, k)).alias("__i__")
+    ).select(
+        F.col(id_col),
+        (F.col("__o__") + F.col("__i__")).alias("__pos__"),
+        hash_fn(F.substring(ch, F.col("__i__") + 1, k)).alias("__h__"),
+    )
 
 
 def winnow_fingerprints(

@@ -15,6 +15,7 @@ from pyranges_1_x_spark import names as nm
 from pyranges_1_x_spark.core import GenomicRanges
 from pyranges_1_x_spark.plans.interval_join import binned_join, top1_overlap
 from pyranges_1_x_spark.plans.islands import island_agg
+from pyranges_1_x_spark.plans.sweep import interval_rows
 
 _LID = "__ij_lid__"
 
@@ -32,7 +33,11 @@ def subtract_overlaps(
     is carried through (reference range_frame.py:699-707). Only NONEMPTY
     residuals are emitted — a zero-length input row [p,p) denotes the empty
     set and never produces output (the gap/tail filters require
-    start < end; pinned by tests/test_property_based.py).
+    start < end; pinned by tests/test_property_based.py). A self row with a
+    NULL key, Start or End is on no chromosome and leaves no residual
+    (``plans/sweep.py:interval_rows``, the rule every sweep uses); with
+    ``strand_behavior="same"`` the Strand is a key, so a NULL-Strand row
+    leaves none either.
 
     Plan: merge other per group (disjoint blockers) -> ONE left binned join ->
     per-self-row ordered window over blockers emits the gap before each blocker
@@ -56,7 +61,7 @@ def subtract_overlaps(
         .filter(F.col("__be__") > F.col("__bs__"))
     )
     joined = binned_join(
-        self.df,
+        interval_rows(self.df, keys),
         blockers,
         keys=keys,
         how="left",

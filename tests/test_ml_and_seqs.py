@@ -772,6 +772,56 @@ def test_repeated_spans_hot_gram_fallback_shapes_agree(spark):
         repeated_substring_spans(docs, min_count=5, hot_gram_threshold=3)
 
 
+def test_gram_hash_rows_match_their_definition(spark):
+    """The row-form gram generator yields the same (id, pos, hash) multiset
+    as posexplode of the array form, and both equal the definition: the
+    hash of substring(text, pos+1, k) at every gram start 0..len-k (one
+    position-0 gram of the whole text when it is shorter than k, NULL
+    included). Lengths cover the sub-k edge, the chunk edges (n_grams = m^2
+    and m^2 +- 1) and a 3 kB text; characters include two-byte, CJK and
+    non-BMP code points, which count as one character each."""
+    from collections import Counter
+
+    from pyranges_1_x_spark.ml.dedup import md5_hash64, xxhash64_fn
+    from pyranges_1_x_spark.ml.text import chunked_gram_hashes, gram_hash_rows
+
+    k = 5
+    alpha = "é日本語🚀abcdefghij"
+
+    def text(n, salt=0):
+        return "".join(alpha[(i * 7 + salt) % len(alpha)] for i in range(n))
+
+    lengths = [0, k - 1, k, k + 1]
+    lengths += [m * m + d + k - 1 for m in (3, 4, 7) for d in (-1, 0, 1)]
+    rows = [(i, text(n, i)) for i, n in enumerate(lengths)]
+    rows.append((100, "".join(chr(97 + (i * 7919) % 26) for i in range(3000))))
+    rows.append((101, "héllo wörld 日本語 テスト emoji 🚀🚀 done"))
+    rows.append((102, None))
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    starts = spark.createDataFrame(
+        [
+            (i, p)
+            for i, t in rows
+            for p in range(max(len(t or "") - k + 1, 1))
+        ],
+        "doc_id long, pos int",
+    )
+    for hash_fn in (xxhash64_fn, md5_hash64):
+        got = Counter(
+            map(tuple, gram_hash_rows(docs, "doc_id", "text", k, hash_fn).collect())
+        )
+        arr = docs.select(
+            "doc_id",
+            F.posexplode(chunked_gram_hashes(F.col("text"), k, hash_fn)).alias("p", "h"),
+        )
+        defined = starts.join(docs, "doc_id").select(
+            "doc_id", "pos", hash_fn(F.substring("text", F.col("pos") + 1, k))
+        )
+        assert got == Counter(map(tuple, arr.collect()))
+        assert got == Counter(map(tuple, defined.collect()))
+        assert sum(got.values()) == starts.count()
+
+
 def test_text_operators_unicode_character_semantics(spark):
     """The text operators count CHARACTERS, not bytes, for multi-byte
     input: CJK/emoji are one unit each in diversity counters, chunk slicing

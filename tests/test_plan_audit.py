@@ -85,3 +85,37 @@ def test_audit_flags_unaggregated_narrow_windows(spark):
     )
     assert not flags
     assert any("global-window-over-bounded-input" in n for n in notes)
+
+
+def test_repeated_spans_gram_stage_compiles_on_every_slot(spark):
+    """repeated_substring_spans hashes its grams without a higher-order
+    lambda (CodegenFallback, interpreted) and spreads the documents over
+    every task slot before the first explode: one user-numbered doc_id
+    repartition, exempt from AQE coalescing, below the first Generate."""
+    import re
+
+    from pyranges_1_x_spark.ml.dedup import repeated_substring_spans
+
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} shares this boilerplate sentence, then {i * 31} ends")
+         for i in range(20)],
+        "doc_id long, text string",
+    )
+    df = repeated_substring_spans(docs, min_len=20)
+    assert df.collect()  # the executed plan: AQE's final plan, exchanges reused
+    plan = _plan(df)
+    assert "lambdafunction" not in plan
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    lines = final.splitlines()
+    gen = next(i for i, ln in enumerate(lines) if "Generate " in ln)
+    nparts = spark.sparkContext.defaultParallelism
+    rep = [
+        i for i, ln in enumerate(lines)
+        if re.search(
+            rf"Exchange hashpartitioning\(doc_id#\d+L?, {nparts}\), REPARTITION_BY_NUM", ln
+        )
+    ]
+    assert len(rep) == 1, plan
+    indent = len(lines[gen]) - len(lines[gen].lstrip(" :+-"))
+    assert rep[0] > gen
+    assert len(lines[rep[0]]) - len(lines[rep[0]].lstrip(" :+-")) > indent

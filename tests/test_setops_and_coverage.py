@@ -77,12 +77,15 @@ def test_coverage_bruteforce(spark):
 def test_event_sweeps_drop_unplaced_rows(spark):
     # A row with a NULL Start, End or Chromosome covers nothing in any event
     # sweep: neither its bucket total nor its lone event may shift the other
-    # rows' depth, and a NULL Chromosome is no group.
+    # rows' depth, and a NULL Chromosome is no group. Subtract leaves such a
+    # row no residual.
     from pyranges_1_x_spark import count_overlaps_matrix
 
     schema = "Chromosome string, Start long, End long, Score double"
     rows = [("chr1", 1, 4, 2.0), ("chr1", 3, 8, 1.0), ("chr1", 10, 12, 4.0)]
     bad = [("chr1", None, 11, 1.0), ("chr1", 2, None, 1.0), (None, 0, 20, 1.0)]
+
+    blocker = GenomicRanges(spark.createDataFrame([("chr1", 4, 6, 0.0)], schema))
 
     def sweeps(rows):
         g = GenomicRanges(spark.createDataFrame(rows, schema))
@@ -91,6 +94,7 @@ def test_event_sweeps_drop_unplaced_rows(spark):
             g.coverage_ratio(value_col="Score", use_strand=False),
             g.split_overlaps(use_strand=False, between=True),
             count_overlaps_matrix({"n_a": g, "n_b": g}, use_strand=False),
+            g.subtract_overlaps(blocker),
         ]
         return [sorted(map(tuple, o.df.collect())) for o in outs]
 
