@@ -819,7 +819,6 @@ def test_gram_hash_rows_match_their_definition(spark):
         )
         assert got == Counter(map(tuple, arr.collect()))
         assert got == Counter(map(tuple, defined.collect()))
-        assert sum(got.values()) == starts.count()
 
 
 def test_text_operators_unicode_character_semantics(spark):
