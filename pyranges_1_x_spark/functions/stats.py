@@ -75,51 +75,28 @@ def _dual_depth_lengths(a: GenomicRanges, bdf: DataFrame, keys: list[str]) -> Da
     position totals: ``la`` (depth_a > 0), ``lb`` (depth_b > 0), ``il``
     (both), ``ul`` (either).
 
-    r15 (optimization round): forbes/jaccard used to build each quantity
-    from its own merged relation — island_agg of A and of B evaluated TWICE
-    each (once inside set_intersect/set_union, once for the standalone
-    length sums; plans/r15/forbes_stat_before.txt shows the duplicated
-    Window+Exchange island subtrees). Covered-position totals do not need
-    the islands at all: sum of merged-interval lengths == number of
-    positions with coverage depth > 0, so ONE two-column prefix sweep over
-    the union of both sets' start/end events yields every total in a
-    single pass (guide §1.2 "the distributed algorithm", §2.4). Integer
-    segment sums, so the values are bit-identical to the merged-relation
-    formulation (zero-length intervals net +1-1 at one point and
-    contribute nothing either way; interior event points split segments
-    without changing sums). Rows with a NULL key, Start or End are dropped
-    from both sets (plans/sweep.py:interval_rows), as the equality-keyed
-    set_intersect_overlaps never matches them.
+    Covered-position totals need no merged relation: the sum of
+    merged-interval lengths is the number of positions with coverage depth
+    > 0, so ONE two-column depth sweep (plans/sweep.py:depth_runs) over both
+    sets yields every total in a single pass. Building each quantity from its
+    own merged relation evaluated island_agg of A and of B twice each (once
+    inside set_intersect/set_union, once for the standalone length sums;
+    plans/r15/forbes_stat_before.txt shows the duplicated Window+Exchange
+    island subtrees). Integer segment sums, so the values are bit-identical
+    to the merged-relation formulation (zero-length intervals net +1-1 at one
+    point and contribute nothing either way; interior event points split
+    segments without changing sums). Rows with a NULL key, Start or End are
+    dropped from both sets (plans/sweep.py:interval_rows), as the
+    equality-keyed set_intersect_overlaps never matches them.
     """
-    from pyranges_1_x_spark.plans.sweep import interval_rows, prefix_sweep
+    from pyranges_1_x_spark.plans.sweep import depth_runs
 
-    ev = []
-    for src, is_a in ((interval_rows(a.df, keys), True), (interval_rows(bdf, keys), False)):
-        for pos, d in ((nm.START_COL, 1), (nm.END_COL, -1)):
-            ev.append(
-                src.select(
-                    *keys,
-                    F.col(pos).alias("__p__"),
-                    F.lit(d if is_a else 0).alias("__da__"),
-                    F.lit(d if not is_a else 0).alias("__db__"),
-                )
-            )
-    events = ev[0]
-    for e in ev[1:]:
-        events = events.unionByName(e)
-    deltas = events.groupBy(*keys, "__p__").agg(
-        F.sum("__da__").alias("__da__"), F.sum("__db__").alias("__db__")
-    )
-    segs = prefix_sweep(
-        deltas,
+    segs = depth_runs(
+        [(a.df, {"__ca__": F.lit(1)}), (bdf, {"__cb__": F.lit(1)})],
         keys,
-        "__p__",
-        ["__da__", "__db__"],
-        ["__ca__", "__cb__"],
         bucket_width=a.resolve_bin(None) * 16,
-        next_col="__np__",
-    ).filter(F.col("__np__").isNotNull())
-    seg_len = F.col("__np__") - F.col("__p__")
+    )
+    seg_len = F.col(nm.END_COL) - F.col(nm.START_COL)
     ca, cb = F.col("__ca__") > 0, F.col("__cb__") > 0
     return segs.agg(
         F.coalesce(F.sum(F.when(ca, seg_len)), F.lit(0)).alias("la"),
@@ -190,29 +167,36 @@ def relative_distance(
 ) -> DataFrame:
     """Distribution of each A-midpoint's relative position between the two
     surrounding B-midpoints, in [0, 0.5] (reference ext/stats.py:800-864):
-    an as-of lookup of the previous/next B midpoint via one sorted sweep."""
-    am = a.df.select(
-        nm.CHROM_COL, ((F.col(nm.START_COL) + F.col(nm.END_COL)) / 2).alias("__m__")
-    ).withColumn("__typ__", F.lit(0))
-    bm = b.df.select(
-        nm.CHROM_COL, ((F.col(nm.START_COL) + F.col(nm.END_COL)) / 2).alias("__m__")
-    ).withColumn("__typ__", F.lit(1))
-    allp = am.unionByName(bm)
-    wprev = (
-        Window.partitionBy(nm.CHROM_COL)
-        .orderBy(F.col("__m__").asc(), F.col("__typ__").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
+    an as-of lookup of the previous/next B midpoint in one
+    ``bucketed_scan`` per Chromosome — a running max ascending and a running
+    min descending, B first at ties. Midpoint order is the order of
+    ``Start + End``, so the scan buckets on that. Rows with a NULL
+    Chromosome, Start or End have no midpoint on any chromosome and are
+    dropped from both sets (plans/sweep.py:interval_rows)."""
+    from pyranges_1_x_spark.plans.interval_join import floordiv
+    from pyranges_1_x_spark.plans.sweep import Scan, bucketed_scan, interval_rows
+
+    keys = [nm.CHROM_COL]
+
+    def midpoints(g: GenomicRanges, typ: int) -> DataFrame:
+        s2 = F.col(nm.START_COL) + F.col(nm.END_COL)
+        return interval_rows(g.df, keys).select(
+            nm.CHROM_COL, s2.alias("__s2__"), (s2 / 2).alias("__m__"), F.lit(typ).alias("__typ__")
+        )
+
+    # Buckets of 16 bins on the midpoint axis, as the depth sweeps use.
+    pts = midpoints(a, 0).unionByName(midpoints(b, 1)).withColumn(
+        "__bkt__", floordiv(F.col("__s2__"), 2 * a.resolve_bin(None) * 16)
     )
-    wnext = (
-        Window.partitionBy(nm.CHROM_COL)
-        .orderBy(F.col("__m__").desc(), F.col("__typ__").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    prev_b = F.max(F.when(F.col("__typ__") == 1, F.col("__m__"))).over(wprev)
-    next_b = F.min(F.when(F.col("__typ__") == 1, F.col("__m__"))).over(wnext)
+    b_mid = F.when(F.col("__typ__") == 1, F.col("__m__"))
     d = (
-        allp.withColumn("__prev__", prev_b)
-        .withColumn("__next__", next_b)
+        bucketed_scan(pts, keys, "__bkt__", [
+            Scan("__prev__", "max", b_mid, [F.col("__s2__").asc(), F.col("__typ__").desc()]),
+            Scan(
+                "__next__", "min", b_mid, [F.col("__s2__").desc(), F.col("__typ__").desc()],
+                desc=True,
+            ),
+        ])
         .filter((F.col("__typ__") == 0) & F.col("__prev__").isNotNull() & F.col("__next__").isNotNull())
         .filter(F.col("__next__") > F.col("__prev__"))
     )

@@ -6,8 +6,10 @@ is a plain interval DataFrame (Chromosome[,Strand], Start, End, Value) rather
 than a special RLE type (SURVEY.md §1.1) — runs partition the covered axis and
 carry the depth (or value-weighted depth) over each run.
 
-Scale: groupBy(point) pre-aggregates deltas map-side; the single window cumsum
-per (chrom[,strand]) has O(1) state. No collect_list anywhere.
+Scale: both operators read their runs from plans/sweep.py:depth_runs, which
+pre-aggregates the deltas per point map-side and runs the cumulative sum as a
+two-phase bucketed scan, parallel within a chromosome. No collect_list
+anywhere.
 """
 
 from __future__ import annotations
@@ -36,30 +38,14 @@ def to_coverage(
     key, Start or End cover nothing and are dropped (and not counted by
     ``rpm``; plans/sweep.py:interval_rows).
     """
-    from pyranges_1_x_spark.plans.sweep import interval_rows, prefix_sweep
+    from pyranges_1_x_spark.plans.sweep import depth_runs, interval_rows
 
     keys = self.group_keys(use_strand)
     val = F.col(value_col).cast("double") if value_col else F.lit(1).cast("long")
-    d = interval_rows(self.df, keys)
-    starts = d.select(*keys, F.col(nm.START_COL).alias("__pos__"), val.alias("__delta__"))
-    ends = d.select(*keys, F.col(nm.END_COL).alias("__pos__"), (-val).alias("__delta__"))
-    deltas = starts.unionByName(ends).groupBy(*keys, "__pos__").agg(
-        F.sum("__delta__").alias("__delta__")
-    )
-    runs = prefix_sweep(
-        deltas, keys, "__pos__", ["__delta__"], ["__cum__"],
-        bucket_width=self.resolve_bin(None) * 16,
-    ).filter(F.col("__next__").isNotNull())
-    value = F.col("__cum__")
+    out = depth_runs([(self.df, {value_out: val})], keys, bucket_width=self.resolve_bin(None) * 16)
     if rpm:
-        n = d.count()
-        value = value * F.lit(1_000_000.0 / n)
-    out = runs.select(
-        *keys,
-        F.col("__pos__").alias(nm.START_COL),
-        F.col("__next__").alias(nm.END_COL),
-        value.alias(value_out),
-    )
+        n = interval_rows(self.df, keys).count()
+        out = out.withColumn(value_out, F.col(value_out) * F.lit(1_000_000.0 / n))
     if drop_zero:
         out = out.filter(F.col(value_out) != 0)
     return GenomicRanges(out)
@@ -83,35 +69,15 @@ def coverage_ratio(
     null. ``defragment`` merges adjacent runs with equal ratio. Returns
     (keys..., Start, End, ratio_out[, Value, Depth]). Rows with a NULL key,
     Start or End are dropped (plans/sweep.py:interval_rows)."""
-    from pyranges_1_x_spark.plans.sweep import interval_rows, prefix_sweep
+    from pyranges_1_x_spark.plans.sweep import depth_runs
 
     keys = self.group_keys(use_strand)
-    val = F.col(value_col).cast("double")
-    d = interval_rows(self.df, keys)
-    starts = d.select(
-        *keys, F.col(nm.START_COL).alias("__pos__"),
-        val.alias("__dv__"), F.lit(1).cast("long").alias("__dc__"),
-    )
-    ends = d.select(
-        *keys, F.col(nm.END_COL).alias("__pos__"),
-        (-val).alias("__dv__"), F.lit(-1).cast("long").alias("__dc__"),
-    )
-    deltas = starts.unionByName(ends).groupBy(*keys, "__pos__").agg(
-        F.sum("__dv__").alias("__dv__"), F.sum("__dc__").alias("__dc__")
-    )
-    runs = prefix_sweep(
-        deltas, keys, "__pos__", ["__dv__", "__dc__"], ["__cv__", "__cc__"],
-        bucket_width=self.resolve_bin(None) * 16,
-    ).filter(F.col("__next__").isNotNull())
-    raw = F.col("__cv__") / F.col("__cc__")
-    ratio = F.when(F.col("__cc__") > 0, F.log2(raw) if log2 else raw)
+    weights = {"Value": F.col(value_col).cast("double"), "Depth": F.lit(1).cast("long")}
+    runs = depth_runs([(self.df, weights)], keys, bucket_width=self.resolve_bin(None) * 16)
+    raw = F.col("Value") / F.col("Depth")
+    ratio = F.when(F.col("Depth") > 0, F.log2(raw) if log2 else raw)
     runs = runs.select(
-        *keys,
-        F.col("__pos__").alias(nm.START_COL),
-        F.col("__next__").alias(nm.END_COL),
-        ratio.alias(ratio_out),
-        F.col("__cv__").alias("Value"),
-        F.col("__cc__").alias("Depth"),
+        *keys, nm.START_COL, nm.END_COL, ratio.alias(ratio_out), "Value", "Depth"
     )
     if not defragment:
         return GenomicRanges(runs)

@@ -27,14 +27,14 @@ def count_overlaps_matrix(
     Without ``features`` this never joins: because the atomic segments are cut
     at every input boundary, "intervals overlapping a segment" equals
     "intervals covering the segment start", so all N count columns come from
-    ONE event-point sweep — union of tagged ±1 deltas, one hash aggregation,
-    one window computing all N running sums in a single pass. With explicit
+    ONE event-point sweep (plans/sweep.py:depth_runs): each input weighs 1
+    in its own column, and one scan computes all N running sums. With explicit
     ``features`` (arbitrary, unaligned) it falls back to N binned count joins.
     The sweep drops rows with a NULL key, Start or End
     (plans/sweep.py:interval_rows), which the count joins never match.
     """
     from pyranges_1_x_spark import concat
-    from pyranges_1_x_spark.plans.sweep import interval_rows, prefix_sweep
+    from pyranges_1_x_spark.plans.sweep import depth_runs
 
     items = list(grs.items())
     if features is not None:
@@ -48,40 +48,13 @@ def count_overlaps_matrix(
 
     allg = concat([g for _, g in items])
     base = allg.remove_strand() if use_strand is False else allg
-    keys = base.group_keys(use_strand)
-
-    n = len(items)
-    evs = []
-    for idx, (_, g) in enumerate(items):
-        d = interval_rows(g.remove_strand().df if use_strand is False else g.df, keys)
-        for pos_col, delta in ((nm.START_COL, 1), (nm.END_COL, -1)):
-            evs.append(
-                d.select(
-                    *keys,
-                    F.col(pos_col).alias("__pos__"),
-                    *[
-                        F.lit(delta if j == idx else 0).alias(f"__d{j}__")
-                        for j in range(n)
-                    ],
-                )
-            )
-    ev = evs[0]
-    for e in evs[1:]:
-        ev = ev.unionByName(e)
-    agg = ev.groupBy(*keys, "__pos__").agg(
-        *[F.sum(f"__d{j}__").alias(f"__d{j}__") for j in range(n)]
-    )
-    cum = prefix_sweep(
-        agg, keys, "__pos__", [f"__d{j}__" for j in range(n)], [name for name, _ in items],
-        bucket_width=(bin_size or nm.DEFAULT_BIN_SIZE) * 16, next_col="__np__",
-    )
-    out = cum.filter(F.col("__np__").isNotNull()).select(
-        *keys,
-        F.col("__pos__").alias(nm.START_COL),
-        F.col("__np__").alias(nm.END_COL),
-        *[name for name, _ in items],
-    )
-    return GenomicRanges(out)
+    sources = [
+        (g.remove_strand().df if use_strand is False else g.df, {name: F.lit(1)})
+        for name, g in items
+    ]
+    return GenomicRanges(depth_runs(
+        sources, base.group_keys(use_strand), bucket_width=allg.resolve_bin(bin_size) * 16
+    ))
 
 
 def summary(

@@ -290,7 +290,7 @@ def extend_orfs(
         # r15 (optimization round): the tile relation feeds BOTH direction
         # joins, and the two broadcast branches prune different column sets
         # so their exchanges never canonicalize equal (no ReusedExchange —
-        # the prefix_sweep lesson): the whole distinct+regex-split tile
+        # the depth_runs lesson): the whole distinct+regex-split tile
         # build ran twice, i.e. two full passes over the sequence relation.
         # Persist it (MEMORY_AND_DISK keeps lineage — executor loss
         # recomputes). Tracked (plans/qcache.py, r16): CacheManager holds

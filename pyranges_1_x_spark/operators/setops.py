@@ -293,32 +293,20 @@ def split_overlaps(
 ) -> GenomicRanges:
     """Atomize intervals at every Start/End boundary per group; ``between``
     keeps the segments in gaps too (reference methods/split.py:12-37: concat
-    starts+ends, sort, dedupe, zip adjacent — here: union, distinct, lead).
+    starts+ends, sort, dedupe, zip adjacent — here: the runs of one depth
+    sweep, plans/sweep.py:depth_runs).
     Rows with a NULL key, Start or End are dropped
     (plans/sweep.py:interval_rows)."""
-    from pyranges_1_x_spark.plans.sweep import interval_rows, prefix_sweep
+    from pyranges_1_x_spark.plans.sweep import depth_runs
 
     keys = self.group_keys(use_strand, match_by)
-    base = interval_rows(self.df, keys).select(*keys, nm.START_COL, nm.END_COL)
-    # Event sweep: at each distinct boundary point, the running (+starts
-    # -ends) depth tells whether the following segment is inside >= 1 input
-    # interval — so "covered" needs no join at all, just the same window that
-    # forms the segments. Zero-length inputs contribute +1-1 at one point
-    # (depth unchanged), correctly splitting without covering.
-    starts = base.select(*keys, F.col(nm.START_COL).alias("__p__"), F.lit(1).alias("__d__"))
-    ends = base.select(*keys, F.col(nm.END_COL).alias("__p__"), F.lit(-1).alias("__d__"))
-    deltas = starts.unionByName(ends).groupBy(*keys, "__p__").agg(
-        F.sum("__d__").alias("__d__")
-    )
-    segs = (
-        prefix_sweep(
-            deltas, keys, "__p__", ["__d__"], ["__depth__"],
-            bucket_width=self.resolve_bin(bin_size) * 16, next_col="__np__",
-        )
-        .filter(F.col("__np__").isNotNull())
+    # At each distinct boundary point the running (+starts -ends) depth tells
+    # whether the following segment is inside >= 1 input interval, so
+    # "covered" needs no join. Zero-length inputs contribute +1-1 at one
+    # point (depth unchanged), correctly splitting without covering.
+    segs = depth_runs(
+        [(self.df, {"__depth__": F.lit(1)})], keys, bucket_width=self.resolve_bin(bin_size) * 16
     )
     if not between:
         segs = segs.filter(F.col("__depth__") > 0)
-    return GenomicRanges(
-        segs.select(*keys, F.col("__p__").alias(nm.START_COL), F.col("__np__").alias(nm.END_COL))
-    )
+    return GenomicRanges(segs.drop("__depth__"))

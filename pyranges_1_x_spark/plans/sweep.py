@@ -26,18 +26,17 @@ phase reads the input; a NULL key is a group of its own, as in
 pair's NULL group is a real quota group; ``sort_ranges`` ranks NULLs first).
 The interval sweeps: :func:`interval_rows` is the one test of which interval
 rows a sweep places — every key, Start and End non-NULL. A NULL key names no
-chromosome (strand, match_by group), so the event builders (coverage,
-coverage_ratio, split, count_overlaps_matrix, forbes/jaccard), the island
-planner and nearest all drop such rows, which are also the rows the
-equality-keyed overlap join never matches.
+chromosome (strand, match_by group), so :func:`depth_runs` (for every event
+builder), the island planner, nearest and relative_distance all drop such
+rows, which are also the rows the equality-keyed overlap join never matches.
 
-Clients, with no hand-written exception: ``prefix_sweep`` (coverage,
+Clients, with no hand-written exception: ``depth_runs`` (coverage,
 coverage_ratio, split, count_overlaps_matrix, forbes/jaccard),
 ``asof_extreme`` (nearest_ranges' as-of legs, fdr), the bucketed island scan
-(plans/islands.py), ``nearest_distance``, the k-nearest and fdr ranks,
-``sort_ranges(rank_col=)`` (keys=[], a composite (chrom key, Strand, Start
-bucket) struct bucket) and, in ml/sampling.py, pack/shuffle (keys=[], a
-hash-prefix bucket) and the quota pair (keys=[group]).
+(plans/islands.py), ``nearest_distance``, relative_distance, the k-nearest and
+fdr ranks, ``sort_ranges(rank_col=)`` (keys=[], a composite (chrom key,
+Strand, Start bucket) struct bucket) and, in ml/sampling.py, pack/shuffle
+(keys=[], a hash-prefix bucket) and the quota pair (keys=[group]).
 
 The scan's input feeds two branches (bucket-local windows and the summary).
 Both read the same filtered subtree, so over a file scan AQE can reuse a
@@ -45,7 +44,7 @@ shuffle inside it (ReusedExchange) instead of running it twice; over a
 persisted source AQE 4.1.2 plans each branch its own cache read and reuses
 nothing. Who persists, and why:
 
-* ``prefix_sweep`` persists its pre-aggregated delta relation (tracked,
+* ``depth_runs`` persists its pre-aggregated delta relation (tracked,
   plans/qcache.py): in every consumer that subtree holds a full groupBy
   shuffle over the registry's persisted fixtures, which is the cached-source
   case AQE does not reuse. Without the persist coverage, split and
@@ -55,13 +54,15 @@ nothing. Who persists, and why:
   ``free_tracked()`` once the result is consumed.
 * fdr localCheckpoints its ranked rows before its ``asof_extreme`` pass,
   and nearest_ranges persists the stable-id relations its scans read.
-* The island scan, ``nearest_distance`` and pack/shuffle recompute: their
-  inputs are scans or cheap projections (a tracked persist of a 6M-row
-  derived island input lost 4/4 interleaved rounds, OPTIMIZATION_r16.md §8).
+* The island scan, ``nearest_distance``, relative_distance and pack/shuffle
+  recompute: their inputs are scans or cheap projections (a tracked persist
+  of a 6M-row derived island input lost 4/4 interleaved rounds,
+  OPTIMIZATION_r16.md §8).
 """
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
@@ -71,7 +72,7 @@ from pyranges_1_x_spark.names import END_COL, START_COL
 from pyranges_1_x_spark.plans.interval_join import floordiv
 from pyranges_1_x_spark.plans.qcache import persist_tracked
 
-__all__ = ["Scan", "bucketed_scan", "interval_rows", "prefix_sweep", "asof_extreme"]
+__all__ = ["Scan", "bucketed_scan", "interval_rows", "depth_runs", "asof_extreme"]
 
 _AGG = {"sum": F.sum, "min": F.min, "max": F.max}
 
@@ -156,29 +157,44 @@ def interval_rows(df: DataFrame, keys: list[str]) -> DataFrame:
     return df.filter(placed)
 
 
-def prefix_sweep(
-    deltas: DataFrame,
+def depth_runs(
+    sources: list[tuple[DataFrame, dict[str, Column]]],
     keys: list[str],
-    pos_col: str,
-    delta_cols: list[str],
-    cum_cols: list[str],
     *,
     bucket_width: int,
-    next_col: str = "__next__",
 ) -> DataFrame:
-    """``deltas`` must have one row per (keys..., pos) — pre-aggregated deltas.
+    """(keys..., Start, End, *depth columns) for every run between two
+    consecutive event points of a group — the sorted +Start/-End sweep of the
+    reference's ``to_rle`` and ``split`` (methods/to_rle.py:15-63,
+    methods/split.py:12-37).
 
-    Returns keys + pos + the running sum of each delta column (ordered by pos
-    within keys, inclusive of the current row) as ``cum_cols`` + ``next_col``
-    (the next position within keys; null on each group's last point).
-    The deltas are persisted (tracked) for the two consuming branches — see
-    the module docstring.
+    Each source is a frame and a map from depth column to per-row weight; a
+    column a source does not name weighs 0 there. Every placed row
+    (:func:`interval_rows`) adds its weight at Start and subtracts it at End;
+    the deltas pre-aggregate per (keys, position), are persisted (tracked —
+    module docstring), and one :func:`bucketed_scan` gives each point the
+    running sums and the next point. A group's last point starts no run.
     """
-    d = persist_tracked(deltas).withColumn("__bkt__", floordiv(F.col(pos_col), bucket_width))
-    order = [F.col(pos_col).asc()]
-    scans = [Scan(cum, "sum", c, order) for c, cum in zip(delta_cols, cum_cols)]
-    out = bucketed_scan(d, keys, "__bkt__", [*scans, Scan(next_col, "next", pos_col, order)])
-    return out.select(*keys, pos_col, *cum_cols, next_col)
+    cols = list(dict.fromkeys(c for _, weights in sources for c in weights))
+    deltas = [f"__d{i}__" for i in range(len(cols))]
+    events = []
+    for df, weights in sources:
+        placed = interval_rows(df, keys)
+        ws = [weights.get(c, F.lit(0)) for c in cols]
+        for pos, signed in ((START_COL, ws), (END_COL, [-w for w in ws])):
+            events.append(placed.select(
+                *keys, F.col(pos).alias("__pos__"), *[w.alias(x) for w, x in zip(signed, deltas)]
+            ))
+    summed = reduce(DataFrame.unionByName, events).groupBy(*keys, "__pos__").agg(
+        *[F.sum(x).alias(x) for x in deltas]
+    )
+    d = persist_tracked(summed).withColumn("__bkt__", floordiv(F.col("__pos__"), bucket_width))
+    order = [F.col("__pos__").asc()]
+    scans = [Scan(c, "sum", x, order) for c, x in zip(cols, deltas)]
+    out = bucketed_scan(d, keys, "__bkt__", [*scans, Scan("__next__", "next", "__pos__", order)])
+    return out.filter(F.col("__next__").isNotNull()).select(
+        *keys, F.col("__pos__").alias(START_COL), F.col("__next__").alias(END_COL), *cols
+    )
 
 
 def asof_extreme(

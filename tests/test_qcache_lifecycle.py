@@ -47,7 +47,7 @@ def test_free_tracked_returns_to_baseline_per_consumer(spark):
     b = _intervals(spark, 150, seed=23)
 
     consumers = {
-        # prefix_sweep persist (plans/sweep.py)
+        # depth_runs persist (plans/sweep.py)
         "coverage": lambda: a.to_coverage(use_strand=False).df,
         # nearest_ranges stable-id persists (nearest.py)
         "nearest_ranges": lambda: a.nearest_ranges(b).df,

@@ -78,14 +78,24 @@ def test_event_sweeps_drop_unplaced_rows(spark):
     # A row with a NULL Start, End or Chromosome covers nothing in any event
     # sweep: neither its bucket total nor its lone event may shift the other
     # rows' depth, and a NULL Chromosome is no group. Subtract leaves such a
-    # row no residual.
+    # row no residual; relative_distance gives it no midpoint, even between
+    # two NULL-Chromosome rows of the other set.
     from pyranges_1_x_spark import count_overlaps_matrix
+    from pyranges_1_x_spark.functions.stats import (
+        forbes_statistic,
+        jaccard_statistic,
+        relative_distance,
+    )
 
     schema = "Chromosome string, Start long, End long, Score double"
     rows = [("chr1", 1, 4, 2.0), ("chr1", 3, 8, 1.0), ("chr1", 10, 12, 4.0)]
     bad = [("chr1", None, 11, 1.0), ("chr1", 2, None, 1.0), (None, 0, 20, 1.0)]
 
     blocker = GenomicRanges(spark.createDataFrame([("chr1", 4, 6, 0.0)], schema))
+    flanks = GenomicRanges(spark.createDataFrame(
+        [(None, 0, 2, 0.0), (None, 30, 32, 0.0), ("chr1", 0, 2, 0.0), ("chr1", 20, 22, 0.0)],
+        schema,
+    ))
 
     def sweeps(rows):
         g = GenomicRanges(spark.createDataFrame(rows, schema))
@@ -95,8 +105,14 @@ def test_event_sweeps_drop_unplaced_rows(spark):
             g.split_overlaps(use_strand=False, between=True),
             count_overlaps_matrix({"n_a": g, "n_b": g}, use_strand=False),
             g.subtract_overlaps(blocker),
+            relative_distance(g, flanks),
+            jaccard_statistic(g, blocker),
+            forbes_statistic(g, blocker, 100),
         ]
-        return [sorted(map(tuple, o.df.collect())) for o in outs]
+        return [
+            sorted(map(tuple, (o.df if isinstance(o, GenomicRanges) else o).collect()))
+            for o in outs
+        ]
 
     assert sweeps(rows + bad) == sweeps(rows)
 

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from pyranges_1_x_spark.plans.interval_join import floordiv
 from pyranges_1_x_spark.plans.qcache import free_tracked
-from pyranges_1_x_spark.plans.sweep import Scan, asof_extreme, bucketed_scan, prefix_sweep
+from pyranges_1_x_spark.plans.sweep import Scan, asof_extreme, bucketed_scan, depth_runs
 
 
 def _points(seed, n=120, span=200):
@@ -95,29 +95,63 @@ def test_asof_extreme_ties_include_data_rows(spark):
     assert {r["rid"]: r["cand"] for r in le.collect()}[1] == 10
 
 
-def test_prefix_sweep_vs_brute(spark):
-    # Two keys, negative positions, one single-point group: running sums of
-    # both delta columns and the next position (NULL on each group's last).
+def _brute_runs(rows):
+    """{(*key, Start, End): depths} of every run between two consecutive event
+    points of a key, from (key tuple, Start, End, weights) rows."""
+    events = {}
+    for key, s, e, ws in rows:
+        for p, sign in ((s, 1), (e, -1)):
+            d = events.setdefault(key, {}).setdefault(p, [0] * len(ws))
+            for i, w in enumerate(ws):
+                d[i] += sign * w
+    out = {}
+    for key, pts in events.items():
+        ps = sorted(pts)
+        run = [0] * len(pts[ps[0]])
+        for p, nxt in zip(ps, ps[1:]):
+            run = [r + d for r, d in zip(run, pts[p])]
+            out[(*key, p, nxt)] = tuple(run)
+    return out
+
+
+def test_depth_runs_vs_brute(spark):
+    # Two sources, each with its own weighted column (b's a double weight,
+    # negative too) and one shared column; two keys, negative positions,
+    # zero-length rows, a single-point group (no run), and rows with a NULL
+    # key, Start or End, which place nothing.
     rng = random.Random(5)
-    rows = [
-        (k1, k2, pos, rng.randint(-3, 3), rng.randint(0, 5))
-        for k1 in ("a", "b")
-        for k2 in ("x", "y")
-        for pos in sorted(rng.sample(range(-20, 25), 12))
-    ] + [("c", "z", -4, 2, 1)]
-    pdf = pd.DataFrame(rows, columns=["k1", "k2", "pos", "d1", "d2"])
-    got = prefix_sweep(
-        spark.createDataFrame(pdf), ["k1", "k2"], "pos", ["d1", "d2"], ["c1", "c2"],
-        bucket_width=3, next_col="nxt",
-    ).collect()
+
+    def rows(n):
+        out = []
+        for _ in range(n):
+            s = rng.randrange(-20, 25)
+            w = rng.randrange(-4, 5) / 2
+            out.append((rng.choice("ab"), rng.choice("xy"), s, s + rng.randrange(0, 7), w))
+        return out
+
+    ra, rb = rows(30) + [("c", "z", -4, -4, 1.0)], rows(30)
+    unplaced = [
+        (None, "x", 0, 5, 1.0), ("a", None, 0, 5, 1.0),
+        ("a", "x", None, 5, 1.0), ("a", "x", 0, None, 1.0),
+    ]
+    schema = "k1 string, k2 string, Start long, End long, w double"
+    a, b = (spark.createDataFrame(r + unplaced, schema) for r in (ra, rb))
+    runs = depth_runs(
+        [(a, {"n_a": F.lit(1), "n": F.lit(1)}), (b, {"w_b": F.col("w"), "n": F.lit(1)})],
+        ["k1", "k2"],
+        bucket_width=3,
+    )
+    assert runs.dtypes == [
+        ("k1", "string"), ("k2", "string"), ("Start", "bigint"), ("End", "bigint"),
+        ("n_a", "bigint"), ("n", "bigint"), ("w_b", "double"),
+    ]
+    got = runs.collect()
     free_tracked()
-    want = {}
-    for (k1, k2), grp in pdf.groupby(["k1", "k2"]):
-        grp = grp.sort_values("pos")
-        nxt = grp.pos.tolist()[1:] + [None]
-        for (pos, c1, c2), n in zip(zip(grp.pos, grp.d1.cumsum(), grp.d2.cumsum()), nxt):
-            want[(k1, k2, pos)] = (c1, c2, n)
-    assert {(r.k1, r.k2, r.pos): (r.c1, r.c2, r.nxt) for r in got} == want
+    want = _brute_runs(
+        [((k1, k2), s, e, (1, 1, 0.0)) for k1, k2, s, e, _ in ra]
+        + [((k1, k2), s, e, (0, 1, w)) for k1, k2, s, e, w in rb]
+    )
+    assert {(r.k1, r.k2, r.Start, r.End): (r.n_a, r.n, r.w_b) for r in got} == want
 
 
 # --- every bucketed_scan client vs brute force / the single-window plan -----
@@ -174,40 +208,30 @@ def test_bucketed_scan_clients_with_nulls(spark, monkeypatch, rows, reverse):
     )
     placed = [r for r in recs if r[1] is not None]
 
-    # prefix_sweep: one delta row per (key, position), NULL positions included
-    deltas = {}
-    for c, s, _, _, _, ln in recs:
-        deltas[(c, s)] = deltas.get((c, s), 0) + ln
-    got = prefix_sweep(
-        spark.createDataFrame(
-            [(c, s, d) for (c, s), d in deltas.items()], "k string, pos long, d long"
-        ),
-        ["k"], "pos", ["d"], ["cum"], bucket_width=3, next_col="nxt",
+    # depth_runs: even rows weigh n in one source, odd rows 1 in two columns
+    # in the other; a NULL Chromosome or Start places no row
+    # (plans/sweep.py:interval_rows) — neither its lone End event nor its
+    # bucket total may shift a placed row's depth
+    keyed = [((c,), s, e, i, ln) for c, s, e, i, _, ln in placed if c is not None]
+    got = depth_runs(
+        [
+            (df.filter(F.col("idx") % 2 == 0), {"d": F.col("n")}),
+            (df.filter(F.col("idx") % 2 == 1), {"d": F.lit(1), "o": F.lit(1)}),
+        ],
+        ["Chromosome"],
+        bucket_width=3,
     ).collect()
     free_tracked()
-    want = {}
-    for k in {c for c, _ in deltas}:
-        pts = sorted(s for c, s in deltas if c == k and s is not None)
-        cum = 0
-        for p, nxt in zip(pts, pts[1:] + [None]):
-            cum += deltas[(k, p)]
-            want[(k, p)] = (cum, nxt)
-    assert {(r.k, r.pos): (r.cum, r.nxt) for r in got} == want
+    want = _brute_runs(
+        [(k, s, e, (1, 1) if i % 2 else (ln, 0)) for k, s, e, i, ln in keyed]
+    )
+    assert {(r.Chromosome, r.Start, r.End): (r.d, r.o) for r in got} == want
 
-    # to_coverage, an event builder over prefix_sweep: a NULL Chromosome or
-    # Start places no row (plans/sweep.py:interval_rows)
+    # to_coverage, an event builder over depth_runs
     gr = GenomicRanges(df)
-    want = set()
-    for k in {c for c, _, _, _, _, _ in placed if c is not None}:
-        ev = {}
-        for c, s, e, _, _, _ in placed:
-            if c == k:
-                ev[s] = ev.get(s, 0) + 1
-                ev[e] = ev.get(e, 0) - 1
-        pts, depth = sorted(ev), 0
-        for p, nxt in zip(pts, pts[1:]):
-            depth += ev[p]
-            want.add((k, p, nxt, depth))
+    want = {(*run, depth) for run, (depth,) in _brute_runs(
+        [(k, s, e, (1,)) for k, s, e, _, _ in keyed]
+    ).items()}
     assert set(map(tuple, gr.to_coverage().df.collect())) == want
     free_tracked()
 
