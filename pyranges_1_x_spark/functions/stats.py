@@ -167,36 +167,32 @@ def relative_distance(
 ) -> DataFrame:
     """Distribution of each A-midpoint's relative position between the two
     surrounding B-midpoints, in [0, 0.5] (reference ext/stats.py:800-864):
-    an as-of lookup of the previous/next B midpoint in one
-    ``bucketed_scan`` per Chromosome — a running max ascending and a running
-    min descending, B first at ties. Midpoint order is the order of
-    ``Start + End``, so the scan buckets on that. Rows with a NULL
-    Chromosome, Start or End have no midpoint on any chromosome and are
-    dropped from both sets (plans/sweep.py:interval_rows)."""
-    from pyranges_1_x_spark.plans.interval_join import floordiv
-    from pyranges_1_x_spark.plans.sweep import Scan, bucketed_scan, interval_rows
-
-    keys = [nm.CHROM_COL]
+    an as-of lookup of the previous/next B midpoint via one sorted sweep per
+    Chromosome. Rows with a NULL Chromosome, Start or End have no midpoint on
+    any chromosome and are dropped from both sets (plans/sweep.py:interval_rows)."""
+    from pyranges_1_x_spark.plans.sweep import interval_rows
 
     def midpoints(g: GenomicRanges, typ: int) -> DataFrame:
-        s2 = F.col(nm.START_COL) + F.col(nm.END_COL)
-        return interval_rows(g.df, keys).select(
-            nm.CHROM_COL, s2.alias("__s2__"), (s2 / 2).alias("__m__"), F.lit(typ).alias("__typ__")
-        )
+        return interval_rows(g.df, [nm.CHROM_COL]).select(
+            nm.CHROM_COL, ((F.col(nm.START_COL) + F.col(nm.END_COL)) / 2).alias("__m__")
+        ).withColumn("__typ__", F.lit(typ))
 
-    # Buckets of 16 bins on the midpoint axis, as the depth sweeps use.
-    pts = midpoints(a, 0).unionByName(midpoints(b, 1)).withColumn(
-        "__bkt__", floordiv(F.col("__s2__"), 2 * a.resolve_bin(None) * 16)
+    allp = midpoints(a, 0).unionByName(midpoints(b, 1))
+    wprev = (
+        Window.partitionBy(nm.CHROM_COL)
+        .orderBy(F.col("__m__").asc(), F.col("__typ__").desc())
+        .rowsBetween(Window.unboundedPreceding, 0)
     )
-    b_mid = F.when(F.col("__typ__") == 1, F.col("__m__"))
+    wnext = (
+        Window.partitionBy(nm.CHROM_COL)
+        .orderBy(F.col("__m__").desc(), F.col("__typ__").desc())
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    prev_b = F.max(F.when(F.col("__typ__") == 1, F.col("__m__"))).over(wprev)
+    next_b = F.min(F.when(F.col("__typ__") == 1, F.col("__m__"))).over(wnext)
     d = (
-        bucketed_scan(pts, keys, "__bkt__", [
-            Scan("__prev__", "max", b_mid, [F.col("__s2__").asc(), F.col("__typ__").desc()]),
-            Scan(
-                "__next__", "min", b_mid, [F.col("__s2__").desc(), F.col("__typ__").desc()],
-                desc=True,
-            ),
-        ])
+        allp.withColumn("__prev__", prev_b)
+        .withColumn("__next__", next_b)
         .filter((F.col("__typ__") == 0) & F.col("__prev__").isNotNull() & F.col("__next__").isNotNull())
         .filter(F.col("__next__") > F.col("__prev__"))
     )

@@ -33,10 +33,10 @@ rows, which are also the rows the equality-keyed overlap join never matches.
 Clients, with no hand-written exception: ``depth_runs`` (coverage,
 coverage_ratio, split, count_overlaps_matrix, forbes/jaccard),
 ``asof_extreme`` (nearest_ranges' as-of legs, fdr), the bucketed island scan
-(plans/islands.py), ``nearest_distance``, relative_distance, the k-nearest and
-fdr ranks, ``sort_ranges(rank_col=)`` (keys=[], a composite (chrom key,
-Strand, Start bucket) struct bucket) and, in ml/sampling.py, pack/shuffle
-(keys=[], a hash-prefix bucket) and the quota pair (keys=[group]).
+(plans/islands.py), ``nearest_distance``, the k-nearest and fdr ranks,
+``sort_ranges(rank_col=)`` (keys=[], a composite (chrom key, Strand, Start
+bucket) struct bucket) and, in ml/sampling.py, pack/shuffle (keys=[], a
+hash-prefix bucket) and the quota pair (keys=[group]).
 
 The scan's input feeds two branches (bucket-local windows and the summary).
 Both read the same filtered subtree, so over a file scan AQE can reuse a
@@ -54,10 +54,9 @@ nothing. Who persists, and why:
   ``free_tracked()`` once the result is consumed.
 * fdr localCheckpoints its ranked rows before its ``asof_extreme`` pass,
   and nearest_ranges persists the stable-id relations its scans read.
-* The island scan, ``nearest_distance``, relative_distance and pack/shuffle
-  recompute: their inputs are scans or cheap projections (a tracked persist
-  of a 6M-row derived island input lost 4/4 interleaved rounds,
-  OPTIMIZATION_r16.md §8).
+* The island scan, ``nearest_distance`` and pack/shuffle recompute: their
+  inputs are scans or cheap projections (a tracked persist of a 6M-row
+  derived island input lost 4/4 interleaved rounds, OPTIMIZATION_r16.md §8).
 """
 
 from __future__ import annotations
