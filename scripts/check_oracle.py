@@ -7,8 +7,8 @@ Usage: python scripts/check_oracle.py [--max-seconds-per-query N] [sf_dir] [quer
 ``--max-seconds-per-query`` makes a slow query a loud local FAILURE instead of
 a silent driver starvation (VERDICT r3: one >12-min query turned the whole
 CORRECTNESS file into ``{}``). The Spark materialization runs on a worker
-thread with a wall-clock budget; on timeout the job group is cancelled and the
-query is reported FAIL with its elapsed time.
+thread with a wall-clock budget; on timeout the job group is cancelled, any
+active stream is stopped, and the query is reported FAIL with its elapsed time.
 """
 
 from __future__ import annotations
@@ -95,6 +95,9 @@ def main() -> int:
                     got = fut.result(timeout=budget)
                 except concurrent.futures.TimeoutError:
                     spark.sparkContext.cancelJobGroup(name)
+                    # A job-group cancel does not stop a stream's micro-batches.
+                    for q in spark.streams.active:
+                        q.stop()
                     print(f"FAIL {name}: exceeded {budget:.0f}s budget (driver-starver)")
                     failures.append(name)
                     fut.cancel()
